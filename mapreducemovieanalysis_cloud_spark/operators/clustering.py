@@ -54,7 +54,8 @@ def _assign(
     ``code_only=True`` — the FINAL, corpus-linear assignment when the
     caller only consumes (vec_id, cell) — packs the (d2, cell) ordering
     into ONE int64 (``functions/ordkey.py``; ``cell_bound`` = the
-    caller's k, since cells are seed ids < k throughout the Lloyd chain)
+    caller's static k, since cells are seed ids < k throughout the Lloyd
+    chain; an in-plan derived k has no static bound and keeps min_by)
     so the arg-min is a plain ``min(long)``: codegen HashAggregate with
     map-side partials and NO per-partition Sort, where the min_by's
     STRUCT ordering buffer planned as SortAggregate and paid a Sort of
@@ -231,13 +232,16 @@ def kmeans_assignments(
             )
     else:
         train = pts
+    # the packed final arg-min needs a static cell bound: k, unless the
+    # cell count is derived in-plan (k_dyn may exceed k) — then min_by
+    packed = not keep_vec and target_cluster_size is None
     assigned = None
     for it in range(iters):
         last = it == iters - 1
         assigned = _assign(
             pts if last else train,
             cents,
-            code_only=last and not keep_vec,
+            code_only=last and packed,
             cell_bound=k,
         )
         if not last:

@@ -681,6 +681,19 @@ def decontaminate(
     fingerprint-set size, not its byte size. Documents shorter than
     ``n`` tokens have no fingerprints and are absent from the output
     (they cannot overlap anything).
+
+    Scoring is ONE left join + ONE aggregation: ``rfp`` is distinct, so
+    the left join keeps every batch fingerprint row exactly once,
+    ``count(__hit)`` is the shared count and ``count(1)`` the per-doc
+    total — no second aggregation joined back on the doc id (round-14
+    optimization, guide §2.4: it halves the batch-fingerprint subtree
+    and drops a doc-id outer join).
+
+    Behaviour change in that rewrite: a batch doc with a NULL id now
+    gets its REAL shared count (and can be flagged ``contaminated``).
+    The former doc-id join never matched a NULL key, so such docs were
+    reported with ``n_shared`` forced to 0.  All NULL-id docs share the
+    one NULL group, as in any group-by.
     """
     bfp = winnow_fingerprints(batch, n, window, id_col, text_col)
     rfp = (
@@ -688,29 +701,6 @@ def decontaminate(
         .select("fp")
         .distinct()
     )
-    return _decontaminate_score(bfp, rfp, min_shared, id_col)
-
-
-def _decontaminate_score(
-    bfp: DataFrame, rfp: DataFrame, min_shared: int, id_col: str
-) -> DataFrame:
-    """Shared scoring tail of ``decontaminate``/``decontaminate_split``:
-    per-doc fingerprint count, shared-with-reference count, gate flag.
-
-    ONE left join + ONE aggregation, not the former per_doc/shared split
-    (two aggregations over bfp joined back on the doc id): ``rfp`` is
-    distinct, so the left join preserves every bfp row exactly once and
-    ``count(__hit)`` counts exactly the rows the former inner-join leg
-    counted, while ``count(1)`` is the former per-doc total — identical
-    output including docs with a NULL id (no doc-id join whose
-    isnotnull pushdown could drop them).  Plan-wise this halves the bfp
-    subtree (consumed once, not twice), drops the doc-id outer join
-    outright, and — because nothing pushes a doc-id filter into one
-    copy and not the other — keeps the split form's two winnow
-    subtrees canonically identical so exchange reuse fingerprints the
-    corpus ONCE (round-14 optimization, guide §2.4; the former shape
-    defeated reuse via the LeftOuter join's isnotnull(doc_id) pushdown
-    reaching only the ``shared`` leg's scan)."""
     hit = bfp.join(rfp.withColumn("__hit", F.lit(1)), "fp", "left")
     return (
         hit.groupBy(id_col)
@@ -720,17 +710,6 @@ def _decontaminate_score(
         )
         .withColumn("contaminated", F.col("n_shared") >= min_shared)
     )
-
-
-# A decontaminate_split variant (batch/reference filter ABOVE one shared
-# winnow pass, carry= flag through winnow_fingerprints, AQE exchange reuse
-# fingerprinting the corpus once — guide §2.4) was built and interleaved-
-# A/B measured in round 14: with the single-join scoring tail above, the
-# two-frame form already fingerprints each document exactly once (the two
-# filters are disjoint), while the shared-exchange form re-runs the
-# per-doc window over the FULL corpus in both branches — measured
-# +0.10/+0.14 s on the two registered queries. Rejected; see
-# OPTIMIZATION_r14.md.
 
 
 def incremental_exact_dedup(

@@ -32,7 +32,12 @@ Probe cost at 100 TB: the corpus is never touched — the scan reads
 grouped count over those pruned postings, corpus stats are a one-row
 broadcast, and the score tree is shared verbatim with the scan-time
 path (``ranking.bm25_from_tables``), so index and direct scoring are
-bit-identical against the same oracle SQL.
+bit-identical against the same oracle SQL.  A probe reads the layout
+metadata ONCE, with one Spark job: the one-row ``<path>/meta`` under a
+fixed schema (``read_layout_meta``), shared by every sub-table read of
+that probe (building a BM25 probe runs no other job); the query-term
+bucket ids are hash expressions over literals that the optimizer folds
+into the scan's partition filter.
 
 Write-once / probe-many lifecycle shared with: stored IVF cells
 (pq.py), the linkage blocking index (linkage.py), the incremental-dedup
@@ -57,8 +62,19 @@ N_BUCKETS = 64  # default for new builds; the layout's actual count is
 # guess (the round-1 fixed-bucket lesson, applied to storage).
 
 
-def _bucket(col: str, n_buckets: int) -> F.Column:
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets))
+# the meta row of format v3; v2 layouts wrote only n_buckets
+_META_DDL = (
+    "n_buckets int, format_version int, postings_schema string,"
+    " doclen_schema string, stats_schema string"
+)
+
+
+def _bucket(col: str | F.Column, n_buckets: int) -> F.Column:
+    """Term-hash bucket id, as the int the postings' ``bucket`` partition
+    column holds (the cast keeps the v3 pinned DDL on the dtype hive
+    partition inference always produced).  Over a literal term it folds
+    to a constant at optimization time."""
+    return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
 
 
 def _ddl(schema) -> str:
@@ -68,13 +84,18 @@ def _ddl(schema) -> str:
     )
 
 
-def _layout_schema(
-    spark: SparkSession, path: str, sub: str
-) -> str | None:
-    """The build-time-pinned DDL for ``<path>/<sub>`` from meta (format
-    v3), or None on a v2 layout (caller falls back to inference)."""
-    row = spark.read.parquet(f"{path}/meta").collect()[0]
-    return getattr(row, f"{sub}_schema", None)
+def read_layout_meta(spark: SparkSession, path: str, ddl: str = _META_DDL):
+    """The one-row ``<path>/meta`` of a stored layout as a Row, read under
+    the explicit ``ddl``: one collect job and no footer-inference job.
+    Columns an older layout never wrote read as NULL."""
+    return spark.read.schema(ddl).parquet(f"{path}/meta").collect()[0]
+
+
+def _sub_reader(spark: SparkSession, meta, sub: str):
+    """Reader for ``<path>/<sub>``: the build-time-pinned DDL from meta
+    (format v3), or schema inference on a v2 layout (NULL schema)."""
+    ddl = meta[f"{sub}_schema"]
+    return spark.read.schema(ddl) if ddl else spark.read
 
 
 def _postings(
@@ -109,9 +130,7 @@ def _write_postings(
     term within the file, so every parquet row group carries a tight
     term min/max for skipping."""
     (
-        # int cast keeps the v3 pinned DDL on the same dtype
-        # hive-partition inference always produced for the bucket dirs
-        tf.withColumn("bucket", _bucket("term", n_buckets).cast("int"))
+        tf.withColumn("bucket", _bucket("term", n_buckets))
         .repartition(n_buckets, "bucket")
         .sortWithinPartitions("bucket", "term")
         .write.mode(mode)
@@ -134,24 +153,22 @@ def build_inverted_index(
     never disagree on the partitioning function."""
     tf, dl = _postings(docs, id_col, text_col)
     spark = docs.sparkSession
-    # Format v3: the sub-table schemas are pinned in meta at build time
-    # and every probe applies them explicitly — no probe ever pays (or
+    # Format v3: the sub-table schemas are pinned in meta at build time,
+    # meta itself is read under the fixed _META_DDL, and every probe
+    # applies the pinned schemas explicitly — no probe ever pays (or
     # depends on) parquet footer inference, and an EMPTY corpus builds a
     # valid zero-row index (partitionBy writes no part files for zero
     # rows, so an inference-based read would raise
     # UNABLE_TO_INFER_SCHEMA; r08 empty-input sweep). v2 layouts lack
     # the schema columns and fall back to inference unchanged.
     postings_ddl = _ddl(
-        tf.withColumn(
-            "bucket", _bucket("term", n_buckets).cast("int")
-        ).schema
+        tf.withColumn("bucket", _bucket("term", n_buckets)).schema
     )
     doclen_ddl = _ddl(dl.schema)
     stats_ddl = "n_docs_total bigint, sum_dl bigint"
     spark.createDataFrame(
         [(int(n_buckets), 3, postings_ddl, doclen_ddl, stats_ddl)],
-        "n_buckets int, format_version int, postings_schema string,"
-        " doclen_schema string, stats_schema string",
+        _META_DDL,
     ).write.mode("overwrite").parquet(f"{path}/meta")
     dl.write.mode("overwrite").parquet(f"{path}/doclen")
     dl.agg(
@@ -297,7 +314,7 @@ def _resolve_sub(path: str, sub: str) -> tuple[str, bool]:
 
 
 def _union_with_batches(
-    spark: SparkSession, path: str, sub: str
+    spark: SparkSession, path: str, sub: str, meta=None
 ) -> DataFrame:
     """Base ``<path>/<sub>`` unioned with every COMMITTED batch's
     ``<sub>``.  Each root is read separately (identical schemas) so the
@@ -305,13 +322,15 @@ def _union_with_batches(
     filter prunes each scan independently.  Crash states left by a died
     compaction are resolved read-only (``_resolve_sub``) — probes never
     mutate the layout, so concurrent probes cannot race a heal and
-    cannot hijack a live compact's fold."""
+    cannot hijack a live compact's fold.  ``meta``: the layout's meta
+    row, when the caller already read it."""
     data_dir, batches_live = _resolve_sub(path, sub)
-    ddl = _layout_schema(spark, path, sub)
+    if meta is None:
+        meta = read_layout_meta(spark, path)
     # v3 layouts: the pinned schema makes the read inference-free AND
     # total over empty dirs (a zero-row base or batch has no part
     # files); v2 layouts infer as before
-    reader = spark.read.schema(ddl) if ddl else spark.read
+    reader = _sub_reader(spark, meta, sub)
     df = reader.parquet(data_dir)
     if batches_live:
         for bdir in _committed_batches(path):
@@ -319,11 +338,13 @@ def _union_with_batches(
     return df
 
 
-def read_index_stats(spark: SparkSession, path: str) -> DataFrame:
+def read_index_stats(
+    spark: SparkSession, path: str, meta=None
+) -> DataFrame:
     """One-row (n_docs_total, sum_dl): the base stats plus every
     committed batch's delta — the batch deltas are one row each, so this
     is a driver-size aggregate regardless of corpus size."""
-    return _union_with_batches(spark, path, "stats").agg(
+    return _union_with_batches(spark, path, "stats", meta).agg(
         F.sum("n_docs_total").alias("n_docs_total"),
         F.sum("sum_dl").alias("sum_dl"),
     )
@@ -375,19 +396,17 @@ def append_to_inverted_index(
     if os.path.isdir(bdir):
         shutil.rmtree(bdir)  # failed prior attempt: discard and redo
     tf, dl = _postings(docs, id_col, text_col)
-    nb = layout_buckets(spark, path)
+    meta = read_layout_meta(spark, path)
     dl.write.mode("overwrite").parquet(f"{bdir}/doclen")
     # stats delta from the WRITTEN doclen parquet (a tiny 2-column read)
     # rather than dl.agg(...): re-aggregating dl would re-run the whole
     # tokenize+groupBy lineage a second time, which costs more than the
     # read-back and could in principle diverge from the bytes on disk
-    dl_ddl = _layout_schema(spark, path, "doclen")
-    dl_reader = spark.read.schema(dl_ddl) if dl_ddl else spark.read
-    dl_reader.parquet(f"{bdir}/doclen").agg(
+    _sub_reader(spark, meta, "doclen").parquet(f"{bdir}/doclen").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs_total"),
         F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("sum_dl"),
     ).write.mode("overwrite").parquet(f"{bdir}/stats")
-    _write_postings(tf, bdir, "overwrite", nb)
+    _write_postings(tf, bdir, "overwrite", meta.n_buckets)
     with open(os.path.join(bdir, "_COMMITTED"), "w"):
         pass  # marker: commit point
 
@@ -452,29 +471,27 @@ def compact_inverted_index(spark: SparkSession, path: str) -> None:
 
     with maintenance_lock(path):
         _recover_fold(path)
-        nb = layout_buckets(spark, path)
+        meta = read_layout_meta(spark, path)
         tmp = os.path.join(path, "__compact")
         guarded_rmtree(tmp)
-        post = _union_with_batches(spark, path, "postings")
+        post = _union_with_batches(spark, path, "postings", meta)
         id_col = next(
             c for c in post.columns
             if c not in ("term", "tf", "positions", "bucket")
         )
-        dl = _union_with_batches(spark, path, "doclen").dropDuplicates(
-            [id_col]
-        )
+        dl = _union_with_batches(
+            spark, path, "doclen", meta
+        ).dropDuplicates([id_col])
         (
             post.dropDuplicates([id_col, "term"])
-            .repartition(nb, "bucket")
+            .repartition(meta.n_buckets, "bucket")
             .sortWithinPartitions("bucket", "term")
             .write.mode("overwrite")
             .partitionBy("bucket")
             .parquet(f"{tmp}/postings")
         )
         dl.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/doclen")
-        dl_ddl = _layout_schema(spark, path, "doclen")
-        dl_reader = spark.read.schema(dl_ddl) if dl_ddl else spark.read
-        dl_reader.parquet(f"{tmp}/doclen").agg(
+        _sub_reader(spark, meta, "doclen").parquet(f"{tmp}/doclen").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs_total"),
             F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias(
                 "sum_dl"
@@ -494,22 +511,22 @@ def compact_inverted_index(spark: SparkSession, path: str) -> None:
 
 def layout_buckets(spark: SparkSession, path: str) -> int:
     """The layout's bucket count, from ``<path>/meta`` (one row)."""
-    return spark.read.parquet(f"{path}/meta").collect()[0].n_buckets
+    return read_layout_meta(spark, path).n_buckets
 
 
-def query_term_buckets(
-    spark: SparkSession, terms: list[str], n_buckets: int = N_BUCKETS
-) -> list[int]:
-    """Bucket ids for the query terms — a |Q|-row jobs whose collect is
-    bounded by the query size (the same defensible driver-side set as
-    the IVF probe-cell collect, similarity.py), buying STATIC partition
-    pruning on the postings read."""
-    tdf = spark.createDataFrame([(t,) for t in terms], ["term"])
-    return sorted(
-        r.b
-        for r in tdf.select(
-            _bucket("term", n_buckets).alias("b")
-        ).distinct().collect()
+def _pruned_postings(
+    spark: SparkSession, path: str, terms: list[str], meta
+) -> DataFrame:
+    """Postings of ``terms`` only: the bucket filter is a literal IN-list
+    once the optimizer folds the per-term hashes, so the scan STATICALLY
+    prunes to the ≤ |Q| bucket directories (PartitionFilters) with no
+    driver-side lookup job; the pushed term filter then row-group-prunes
+    within them.  Committed append batches are pruned the same way."""
+    buckets = [_bucket(F.lit(t), meta.n_buckets) for t in terms]
+    return (
+        _union_with_batches(spark, path, "postings", meta)
+        .where(F.col("bucket").isin(buckets))
+        .where(F.col("term").isin(terms))
     )
 
 
@@ -518,16 +535,14 @@ def read_postings(
     path: str,
     terms: list[str],
     id_col: str = "doc_id",
+    meta=None,
 ) -> DataFrame:
-    """The pruned postings scan: bucket partition-pruning + pushed term
-    filter (bucket count read from the layout's meta); committed append
-    batches are unioned in, each pruned the same way."""
-    buckets = query_term_buckets(spark, terms, layout_buckets(spark, path))
-    return (
-        _union_with_batches(spark, path, "postings")
-        .where(F.col("bucket").isin(buckets))
-        .where(F.col("term").isin(terms))
-        .select(F.col(id_col), "term", "tf")
+    """The pruned postings scan (``_pruned_postings``) as
+    (id, term, tf); the bucket count comes from the layout's meta."""
+    if meta is None:
+        meta = read_layout_meta(spark, path)
+    return _pruned_postings(spark, path, terms, meta).select(
+        F.col(id_col), "term", "tf"
     )
 
 
@@ -543,7 +558,7 @@ def phrase_query_index(
     read).
 
     The RAREST phrase term (min document frequency over the pruned
-    postings — a |phrase|-row bounded collect, like the bucket lookup)
+    postings — a |phrase|-row bounded collect)
     anchors: its positions explode to anchor candidates, and every other
     term i keeps anchors whose relative offset it contains
     (``array_contains(pos_i, q + (i - k))``).  Anchor fan-out is the
@@ -558,13 +573,7 @@ def phrase_query_index(
         raise ValueError("a phrase needs at least two terms")
     terms = sorted(set(phrase))
     post = (
-        _union_with_batches(spark, path, "postings")
-        .where(
-            F.col("bucket").isin(
-                query_term_buckets(spark, terms, layout_buckets(spark, path))
-            )
-        )
-        .where(F.col("term").isin(terms))
+        _pruned_postings(spark, path, terms, read_layout_meta(spark, path))
         .select(F.col(id_col), "term", "positions")
         .localCheckpoint(eager=False)
     )
@@ -615,9 +624,10 @@ def bm25_query_index(
     ``ranking.bm25_scores`` on the raw corpus, same score tree, without
     touching the corpus. ``require_all=True`` is the conjunctive-AND
     retrieval mode (docs must contain every query term)."""
-    tf = read_postings(spark, path, terms, id_col)
-    dl = _union_with_batches(spark, path, "doclen")
-    stats = read_index_stats(spark, path)
+    meta = read_layout_meta(spark, path)
+    tf = read_postings(spark, path, terms, id_col, meta)
+    dl = _union_with_batches(spark, path, "doclen", meta)
+    stats = read_index_stats(spark, path, meta)
     return bm25_from_tables(
         tf,
         dl,

@@ -302,7 +302,6 @@ def _ivf_cells(
     cents: DataFrame,
     side_id: str,
     keep: int,
-    cell_bound: int | None = None,
 ) -> DataFrame:
     """Best ``keep`` cells per vector: argmax integer dot against the
     broadcast centroids, centroid id as the deterministic tie-break.
@@ -315,41 +314,10 @@ def _ivf_cells(
     map-side with no per-partition sort (round-13 optimization, guide
     §2.3; see clustering._assign).  ``keep > 1`` is only ever the QUERY
     side (nprobe cells per query — bounded rows) and keeps the window,
-    which a top-n-per-key genuinely needs.
-
-    ``cell_bound`` (keep == 1 only): the caller consumes ONLY
-    (side_id, cell) — pack the (-cdot, cent_id) ordering into one int64
-    (shifted by a constant offset so the score is nonnegative; argmin is
-    shift-invariant) and take a plain ``min(long)``: codegen
-    HashAggregate, no Sort of the n_centroids-way exploded scores, where
-    the struct-ordering min_by planned as SortAggregate (round-14; see
-    functions/ordkey.py for the equivalence + in-plan domain guards —
-    |cdot| < 2^57 holds with ~2^11 headroom for 64-dim unit-scale
-    quantized vectors, |dot| <= 64·(1e6·~30)²)."""
+    which a top-n-per-key genuinely needs."""
     scored = side.join(F.broadcast(cents)).withColumn(
         "cdot", qdot_arrow(F.col(f"qv_{side_id}"), F.col("qv_cent"))
     )
-    if keep == 1 and cell_bound is not None:
-        from mapreducemovieanalysis_cloud_spark.functions.ordkey import (
-            cell_shift,
-            pack_score_cell,
-            unpack_cell,
-        )
-
-        offset = 1 << (62 - cell_shift(cell_bound))
-        packed = pack_score_cell(
-            F.lit(offset) - F.col("cdot"),
-            F.col("cent_id"),
-            cell_bound,
-            "similarity._ivf_cells",
-        )
-        return (
-            scored.groupBy(side_id)
-            .agg(F.min(packed).alias("__p"))
-            .select(
-                side_id, unpack_cell(F.col("__p"), cell_bound).alias("cell")
-            )
-        )
     if keep == 1:
         passthrough = [
             c for c in side.columns if c != side_id
@@ -441,6 +409,9 @@ def ivf_append_batch(
         pass
 
 
+_IVF_META_DDL = "format_version int, cells_schema string"
+
+
 def _ivf_cell_stores(spark, path: str) -> list[DataFrame]:
     """Base cells plus every COMMITTED delta batch, one DataFrame per
     store so a cell predicate prunes partitions inside each subtree.
@@ -450,10 +421,13 @@ def _ivf_cell_stores(spark, path: str) -> list[DataFrame]:
     rows."""
     import os
 
+    from mapreducemovieanalysis_cloud_spark.operators.invindex import (
+        read_layout_meta,
+    )
+
     ddl = None
     if os.path.isdir(f"{path}/meta"):
-        row = spark.read.parquet(f"{path}/meta").collect()[0]
-        ddl = getattr(row, "cells_schema", None)
+        ddl = read_layout_meta(spark, path, _IVF_META_DDL).cells_schema
     base = (
         spark.read.schema(ddl).parquet(f"{path}/cells")
         if ddl
@@ -518,8 +492,7 @@ def ivf_write_index(
     from mapreducemovieanalysis_cloud_spark.operators.invindex import _ddl
 
     corpus.sparkSession.createDataFrame(
-        [(1, _ddl(assigned.schema))],
-        "format_version int, cells_schema string",
+        [(1, _ddl(assigned.schema))], _IVF_META_DDL
     ).write.mode("overwrite").parquet(f"{path}/meta")
     assigned.write.mode("overwrite").partitionBy("cell").parquet(
         f"{path}/cells"

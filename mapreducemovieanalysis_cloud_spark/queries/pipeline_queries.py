@@ -817,7 +817,7 @@ def decontaminate_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # A/B measured at +0.10/+0.14 s — one reused exchange but the per-doc
     # window then runs over the FULL corpus in both branches, while these
     # disjoint filters each window only their half. The win that round
-    # kept is in dedup._decontaminate_score (single-join scoring tail).
+    # kept is dedup.decontaminate's single-join scoring tail.
     batch = docs.where(F.col("source").isin(batch_srcs))
     reference = docs.where(~F.col("source").isin(batch_srcs))
     return dedup.decontaminate(

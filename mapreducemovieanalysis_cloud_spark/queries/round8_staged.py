@@ -781,7 +781,7 @@ def decontamination_overlap_sweep(
     batch_srcs = ["src0", "src1", "src2", "src3", "src4"]
     # two filtered frames deliberately — see decontaminate_batch's note
     # (shared-scan variant measured a LOSS; the kept win is the
-    # single-join scoring tail in dedup._decontaminate_score)
+    # single-join scoring tail in dedup.decontaminate)
     scored = dedup.decontaminate(
         docs.where(F.col("source").isin(batch_srcs)),
         docs.where(~F.col("source").isin(batch_srcs)),

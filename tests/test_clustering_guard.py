@@ -39,3 +39,34 @@ def test_guard_is_per_cell_not_global(spark):
     rows = [(1, 0, [1, 1]), (2, 1, [9, 9, 9])]
     with pytest.raises(Exception, match="wider than dim=2"):
         _update(spark, rows, dim=2).collect()
+
+
+def test_derived_k_above_static_k_assigns_without_packed_guard(spark):
+    """``target_cluster_size`` with ``keep_vec=False``: the in-plan k
+    (here ceil(100/10) = 10) exceeds the static ``k`` default of 8, so the
+    final assignment must not take the packed (score, cell) arg-min whose
+    domain guard is bounded by ``k`` — every vector lands in one of the
+    ten seeded cells, exactly as the ``keep_vec=True`` path assigns it."""
+    from mapreducemovieanalysis_cloud_spark.operators.clustering import (
+        kmeans_assignments,
+    )
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 13), float(i % 7), -1.0, 2.5]) for i in range(100)],
+        "vec_id long, embedding array<float>",
+    )
+    got = {
+        r.vec_id: r.cluster
+        for r in kmeans_assignments(
+            emb, iters=2, target_cluster_size=10, dim=4
+        ).collect()
+    }
+    want = {
+        r.vec_id: r.cluster
+        for r in kmeans_assignments(
+            emb, iters=2, target_cluster_size=10, dim=4, keep_vec=True
+        ).collect()
+    }
+    assert len(got) == 100 and got == want
+    assert set(got.values()) <= set(range(10))
+    assert max(got.values()) >= 8  # a cell the static k would reject

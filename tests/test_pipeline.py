@@ -624,6 +624,41 @@ def test_decontaminate_flags_planted_overlap(spark):
     assert not rows[2].contaminated and rows[2].n_shared == 0
 
 
+def test_decontaminate_scores_null_id_doc_by_real_overlap(spark):
+    """A batch doc with a NULL id is scored by its real overlap — the same
+    n_fps/n_shared as the identical doc under a real id, so it can be
+    flagged — not reported with n_shared forced to 0 (the behaviour of
+    the former doc-id-join scoring)."""
+    from mapreducemovieanalysis_cloud_spark.operators.dedup import (
+        decontaminate,
+    )
+
+    bench_text = " ".join(f"bench{i}" for i in range(60))
+    clean_text = " ".join(f"clean{i}" for i in range(60))
+    reference = spark.createDataFrame(
+        [(100, bench_text)], "doc_id long, text string"
+    )
+
+    def score(doc_id):
+        batch = spark.createDataFrame(
+            [(doc_id, bench_text + " tail0 tail1"), (2, clean_text)],
+            "doc_id long, text string",
+        )
+        return {
+            r.doc_id: (r.n_fps, r.n_shared, r.contaminated)
+            for r in decontaminate(
+                batch, reference, n=3, window=4, min_shared=5
+            ).collect()
+        }
+
+    null_scored, id_scored = score(None), score(1)
+    assert null_scored[None] == id_scored[1]
+    n_fps, n_shared, contaminated = null_scored[None]
+    assert contaminated and 5 <= n_shared < n_fps
+    assert null_scored[2] == id_scored[2]
+    assert null_scored[2][1:] == (0, False)
+
+
 def test_observed_metrics_single_scan(spark, oracle_sf_dir):
     """df.observe() collects pipeline health metrics (input rows, gated
     rows, null texts) as a side product of the ONE scan the query already

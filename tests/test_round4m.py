@@ -15,6 +15,20 @@ from mapreducemovieanalysis_cloud_spark.queries.round4m_queries import (
 )
 from tests.oracle import assert_matches_oracle
 
+
+def query_term_buckets(spark, terms, n_buckets=invindex.N_BUCKETS):
+    """The expected bucket ids of ``terms``, computed by a Spark job over a
+    |Q|-row frame — independent of the probe, which folds the same hash
+    over literals into its plan."""
+    tdf = spark.createDataFrame([(t,) for t in terms], ["term"])
+    return sorted(
+        r.b
+        for r in tdf.select(
+            invindex._bucket("term", n_buckets).alias("b")
+        ).distinct().collect()
+    )
+
+
 ROUND4M = (
     "search_bm25_stored_index",
     "search_conjunctive_stored_index",
@@ -73,7 +87,7 @@ def test_probe_prunes_to_query_buckets(spark, sf_dir):
     from mapreducemovieanalysis_cloud_spark import plans
 
     path = ensure_inverted_index(spark, sf_dir)
-    want = set(invindex.query_term_buckets(spark, _IDX_TERMS))
+    want = set(query_term_buckets(spark, _IDX_TERMS))
     assert 1 <= len(want) <= len(_IDX_TERMS)
     text = plans.explain_formatted(
         invindex.read_postings(spark, path, _IDX_TERMS)
@@ -87,6 +101,79 @@ def test_probe_prunes_to_query_buckets(spark, sf_dir):
     in_list = re.search(r" IN \(([0-9,]+)\)", pf[0])
     assert in_list, pf[0]
     assert {int(x) for x in in_list.group(1).split(",")} == want, pf[0]
+
+
+def _build_jobs(spark, build) -> int:
+    """Spark jobs ``build()`` runs, counted by job group once the status
+    listener has seen a later marker job (events arrive in order)."""
+    import time
+
+    sc = spark.sparkContext
+    tag = f"probe-build-{time.monotonic_ns()}"
+    sc.setJobGroup(f"{tag}:build", "probe build")
+    try:
+        build()
+        sc.setJobGroup(f"{tag}:marker", "marker")
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(f"{tag}:marker"):
+        assert time.time() < deadline, "status listener never caught up"
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(f"{tag}:build"))
+
+
+def test_warm_probe_build_runs_at_most_one_spark_job(spark, sf_dir):
+    """Building the registered BM25 probe on a warm index runs at most the
+    one meta read: the sub-table schemas come from that one row, and the
+    query-term buckets fold into the plan instead of a lookup job."""
+    q = registry.queries()["search_bm25_stored_index"]
+    q(spark, sf_dir)  # warm: the index exists after this
+    assert _build_jobs(spark, lambda: q(spark, sf_dir)) <= 1
+
+
+def test_v2_layout_meta_probes_like_v3(spark, sf_dir):
+    """A v2 layout — meta holding only ``n_buckets``, no pinned sub-table
+    schemas — reads its missing schema columns as NULL and falls back to
+    inference: probes, an append into it, and the appended probe all match
+    a v3 full build."""
+    import shutil
+    import tempfile as _tf
+
+    from mapreducemovieanalysis_cloud_spark.sources.readers import load_table
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    with _tf.TemporaryDirectory() as base:
+        full, v2 = f"{base}/full", f"{base}/v2"
+        invindex.build_inverted_index(docs, full)
+        invindex.build_inverted_index(docs.where("doc_id % 2 = 0"), v2)
+        shutil.rmtree(f"{v2}/meta")
+        spark.createDataFrame(
+            [(invindex.N_BUCKETS,)], "n_buckets int"
+        ).write.parquet(f"{v2}/meta")
+        meta = invindex.read_layout_meta(spark, v2)
+        assert meta.n_buckets == invindex.N_BUCKETS
+        assert meta.postings_schema is None and meta.doclen_schema is None
+        invindex.append_to_inverted_index(
+            docs.where("doc_id % 2 = 1"), spark, v2, batch_id="b1"
+        )
+        for kwargs in ({}, {"require_all": True}):
+            assert (
+                invindex.bm25_query_index(
+                    spark, v2, _IDX_TERMS, topk=50, **kwargs
+                ).collect()
+                == invindex.bm25_query_index(
+                    spark, full, _IDX_TERMS, topk=50, **kwargs
+                ).collect()
+            )
+        v2p, fullp = (
+            invindex.phrase_query_index(spark, d, ["hash", "join"]).collect()
+            for d in (v2, full)
+        )
+        assert sorted(map(tuple, v2p)) == sorted(map(tuple, fullp))
 
 
 def test_conjunctive_mode_is_a_subset_requiring_all_terms(spark, sf_dir):

@@ -40,10 +40,11 @@ DRIVER_ACTION_WHITELIST = {
     "operators/clustering.py": 1,
     # BPE merge table: vocab-sized type table, bounded by n_merges
     "operators/bpe.py": 2,
-    # store meta singletons + layout fingerprints (1-row frames)
-    "operators/invindex.py": 4,
-    # store meta singleton + IVF probe cell list (n_probe cells)
-    "operators/similarity.py": 2,
+    # the one stored-layout meta reader (1-row frame, shared with the
+    # IVF store) + the phrase probe's |phrase|-row df lookup
+    "operators/invindex.py": 2,
+    # IVF probe cell list (n_probe cells)
+    "operators/similarity.py": 1,
     # pagerank_weighted int64 domain guard: max(wsum) / min(w) scalars
     # + hits_scores max-degree guard (r12 verdict item 5), all on
     # localCheckpointed frames
