@@ -3,10 +3,10 @@
 A ``min_by(value, struct(score, cell))`` arg-min is partial-aggregatable,
 but the STRUCT ordering buffer is not hash-aggregatable: Spark plans it as
 SortAggregate, which pays a per-partition Sort of the aggregate's INPUT on
-both sides of the exchange.  In the ANN/k-means kernels that input is the
-k-way exploded score table — k rows per vector — so at 100 TB the sort runs
-over k× the corpus on the encode pass (the one leg that is unavoidably
-corpus-linear).
+both sides of the exchange.  In the product-quantization kernel
+(``pq._assign_sub``) that input is the k-way exploded score table — k rows
+per vector — so at 100 TB the sort runs over k× the corpus on the encode
+pass (the one leg that is unavoidably corpus-linear).
 
 When the caller only needs the winning CELL (``code_only`` paths), the
 (score, cell) lexicographic pair packs losslessly into ONE int64:

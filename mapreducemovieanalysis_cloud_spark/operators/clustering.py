@@ -1,10 +1,18 @@
 """Iterative clustering over embeddings (k-means, fixed Lloyd iterations).
 
-The iterative-algorithm pattern at scale: each iteration is
-broadcast-assign (centroids are always tiny) + dim-wise aggregate (one
-shuffle keyed on (cell, dim) — map-side partial averages). No driver-side
-loops over data: the driver only iterates the PLAN ``iters`` times; each
-iteration's centroids stay a small DataFrame.
+Lloyd's iterations run the way Spark MLlib's KMeans runs them: the k×d
+int64 codebook lives on the driver, and each iteration is one narrow
+``mapInArrow`` assign pass over the points (the codebook rides in the
+kernel's closure, once per task) plus one dim-wise aggregate (one shuffle
+keyed on cell, map-side partial sums). The driver collects only the k
+codebook rows per iteration — the rows a broadcast of the centroids
+would collect there anyway — never point data.
+
+Scale posture: the codebook is k×d longs on the driver and in every task.
+k is a constant, or derived from ``target_cluster_size`` so it grows with
+n (k = n/t codebook rows, the same growth a broadcast codebook had); the
+``train_sample`` tier bounds the intermediate Lloyd rounds by the sample,
+and only the final assign is corpus-linear.
 
 Determinism contract (what makes this oracle-checkable, unlike textbook
 k-means): points are quantized ints, distances are exact int64
@@ -16,94 +24,92 @@ are the first k vectors by id.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from mapreducemovieanalysis_cloud_spark.functions.hashing import md5_bucket
-from mapreducemovieanalysis_cloud_spark.functions.ordkey import (
-    pack_score_cell,
-    unpack_cell,
-)
 from mapreducemovieanalysis_cloud_spark.functions.vector import (
-    qdot_arrow,
+    list_matrix,
     qnorm2,
     quantize,
 )
 
 
-def _assign(
-    pts: DataFrame,
-    cents: DataFrame,
-    code_only: bool = False,
-    cell_bound: int | None = None,
-) -> DataFrame:
-    """Nearest-centroid cell per point: exact integer squared distance,
-    centroid id as tie-break. ``pts``: (vec_id, qv, pn2); ``cents``:
-    (cell, cv, cn2).
-
-    Arg-min as a partial-aggregatable ``min_by`` over the exact-integer
-    ordering struct (d2, cell) — identical selection to the former
-    ``row_number() over (partition by vec_id order by d2, cell)`` window
-    (both comparisons are int64; lexicographic struct order == the
-    window's two-key order), but the k-way score explosion collapses
-    MAP-SIDE: the exchange carries one row per vector instead of k, and
-    no per-partition sort runs (round-13 optimization, guide §2.3
-    "aggregate before you shuffle"; same idiom as canonical_survivors).
-
-    ``code_only=True`` — the FINAL, corpus-linear assignment when the
-    caller only consumes (vec_id, cell) — packs the (d2, cell) ordering
-    into ONE int64 (``functions/ordkey.py``; ``cell_bound`` = the
-    caller's static k, since cells are seed ids < k throughout the Lloyd
-    chain; an in-plan derived k has no static bound and keeps min_by)
-    so the arg-min is a plain ``min(long)``: codegen HashAggregate with
-    map-side partials and NO per-partition Sort, where the min_by's
-    STRUCT ordering buffer planned as SortAggregate and paid a Sort of
-    the k-way exploded score rows on both sides of the exchange — k× the
-    corpus on this leg at 100 TB (round-14 optimization, guide §2.3).
-    Identical selection: d2 is an exact nonnegative int64 and cell < 2^s,
-    so min(d2·2^s + cell) IS the lexicographic (d2, cell) minimum; both
-    domain bounds are asserted per row inside the plan."""
-    scored = pts.join(F.broadcast(cents)).withColumn(
-        "d2",
-        F.col("pn2") - 2 * qdot_arrow(F.col("qv"), F.col("cv")) + F.col("cn2"),
+def _codebook(cents: DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The k centroid rows ``(cell, cv, cn2)`` collected to the driver and
+    sorted by cell: (cells, (k, d) int64 matrix, norms)."""
+    rows = sorted(
+        cents.select("cell", "cv", "cn2").collect(), key=lambda r: r.cell
     )
-    if code_only:
-        if cell_bound is None:
-            raise ValueError("code_only assignment requires cell_bound")
-        packed = pack_score_cell(
-            F.col("d2"), F.col("cell"), cell_bound, "clustering._assign"
-        )
-        return (
-            scored.groupBy("vec_id")
-            .agg(F.min(packed).alias("__p"))
-            .select(
-                "vec_id", unpack_cell(F.col("__p"), cell_bound).alias("cell")
-            )
-        )
+    widths = {-1 if r.cv is None else len(r.cv) for r in rows}
+    if -1 in widths or len(widths) > 1:
+        raise ValueError("clustering._codebook: NULL or ragged centroid")
+    d = widths.pop() if widths else 0
+    cv = np.array([r.cv for r in rows], dtype=np.int64).reshape(len(rows), d)
     return (
-        scored.groupBy("vec_id")
-        .agg(
-            F.min_by(
-                F.struct("qv", "pn2", "cell"),
-                F.struct(F.col("d2").alias("_d2"), F.col("cell").alias("_c")),
-            ).alias("b")
-        )
-        .select("vec_id", "b.qv", "b.pn2", "b.cell")
+        np.array([r.cell for r in rows], dtype=np.int64),
+        cv,
+        np.array([r.cn2 for r in rows], dtype=np.int64),
     )
+
+
+def _assign(pts: DataFrame, codebook, keep_vec: bool = True) -> DataFrame:
+    """Nearest codebook cell per point in one ``mapInArrow`` pass: for each
+    Arrow batch, ``d2 = pn2 − 2·X·Cᵀ + cn2`` in exact int64, then
+    ``argmin`` over the cell-sorted codebook, whose first minimum is the
+    smallest cell — the same choice as a ``(d2, cell)`` lexicographic
+    arg-min. ``pts``: (vec_id, qv, pn2); returns them plus ``cell``
+    (``keep_vec=False``: only vec_id, cell). A narrow map: no join, no
+    exchange, no aggregate.
+
+    Fails loudly instead of returning wrong cells: a NULL or ragged
+    vector, or one whose width differs from the codebook's, raises a
+    ``ValueError``, and so does a batch where ``d·(max|x| + max|c|)² <
+    2^63`` — the bound on every term and partial sum — does not hold
+    (numpy int64 matmul wraps silently). An empty codebook assigns
+    nothing."""
+    cells, cv, cn2 = codebook
+    k, d = cv.shape
+    mc = max(int(cv.max(initial=0)), -int(cv.min(initial=0)))
+    id_t = pts.schema["vec_id"].dataType.simpleString()
+    out = ["vec_id", "qv", "pn2"] if keep_vec else ["vec_id"]
+
+    def assign(batches):
+        import pyarrow as pa
+
+        for rb in batches:
+            if not k or not rb.num_rows:
+                continue
+            x = list_matrix(rb.column("qv"), d, "clustering._assign")
+            mx = max(int(x.max(initial=0)), -int(x.min(initial=0)))
+            if d * (mx + mc) ** 2 >= 1 << 63:
+                raise ValueError(
+                    "clustering._assign: int64 overflow bound violated "
+                    f"(d={d}, max|x|={mx}, max|c|={mc})"
+                )
+            pn2 = rb.column("pn2").to_numpy()
+            d2 = pn2[:, None] - 2 * (x @ cv.T) + cn2[None, :]
+            cell = pa.array(cells[np.argmin(d2, axis=1)]).cast(
+                rb.schema.field("vec_id").type
+            )
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(c) for c in out] + [cell], names=out + ["cell"]
+            )
+
+    schema = f"vec_id {id_t}, qv array<long>, pn2 long, cell {id_t}"
+    if not keep_vec:
+        schema = f"vec_id {id_t}, cell {id_t}"
+    return pts.mapInArrow(assign, schema)
 
 
 def _update(assigned: DataFrame, dim: int) -> DataFrame:
-    """New centroid per cell: per-dimension rounded mean (exact int64 sum,
-    one IEEE division), reassembled in dimension order.
-
-    Dimension-indexed sum aggregates instead of the former
-    posexplode + (cell, pos) rollup + per-cell re-assembly: the explode
-    multiplied the exchange by ``dim`` rows per vector and paid a second
-    shuffle for the array re-assembly; ``dim`` indexed sums partial-
-    aggregate map-side to one row per cell, one exchange total (round-13
-    optimization, guide §2.3).  Value-identical: each dim's
-    ``round(sum/count)`` is the same expression over the same group.
+    """New centroid per cell: per-dimension rounded mean
+    ``CAST(round(s/n) AS bigint)`` (exact int64 sum, one IEEE division),
+    reassembled in dimension order. The ``dim`` indexed sums partial-
+    aggregate map-side to one row per cell, one exchange total; each sum
+    and the reassembly is one SQL expression string, one parse each.
 
     Explicit sum/count rather than avg(): Spark's Average over LongType
     accumulates in DoubleType, which loses the exact-bigint-sum guarantee
@@ -119,13 +125,13 @@ def _update(assigned: DataFrame, dim: int) -> DataFrame:
     pagerank_weighted's int64 guard) instead of producing wrong
     centroids (the engine's embedding tables are 64-wide everywhere;
     see pca_gram's hardcoded 64)."""
-    # F.get (not qv[i]): out-of-bounds must yield null under ANSI mode
+    # get() (not qv[i]): out-of-bounds must yield null under ANSI mode
     # for the shorter-than-dim tolerance above, not raise
     per_cell = assigned.groupBy("cell").agg(
         F.count(F.lit(1)).alias("__n"),
         F.min(F.size("qv")).alias("__len"),
         F.max(F.size("qv")).alias("__maxlen"),
-        *[F.sum(F.get("qv", i)).alias(f"__s{i}") for i in range(dim)],
+        *[F.expr(f"sum(get(qv, {i})) AS __s{i}") for i in range(dim)],
     )
     # assert_true returns null when the guard holds, so the when() wrapper
     # evaluates it per cell and passes __len through unchanged; a wider
@@ -143,18 +149,12 @@ def _update(assigned: DataFrame, dim: int) -> DataFrame:
         ).isNull(),
         F.col("__len"),
     )
+    means = ", ".join(
+        f"CAST(round(__s{i} / __n) AS bigint)" for i in range(dim)
+    )
     return per_cell.select(
         "cell",
-        F.slice(
-            F.array(
-                *[
-                    F.round(F.col(f"__s{i}") / F.col("__n")).cast("long")
-                    for i in range(dim)
-                ]
-            ),
-            1,
-            guarded_len,
-        ).alias("cv"),
+        F.slice(F.expr(f"array({means})"), F.lit(1), guarded_len).alias("cv"),
     ).withColumn("cn2", qnorm2(F.col("cv")))
 
 
@@ -175,12 +175,15 @@ def kmeans_assignments(
     (e.g. SemDeDup pairing) reuses the assignment lineage instead of
     re-joining the corpus.
 
+    The build runs Spark jobs: the seed codebook and each intermediate
+    update are collected to the driver (k rows each, see the module
+    docstring), and the returned frame is the final assign pass.
+
     ``target_cluster_size`` switches k from a constant to a corpus-derived
-    value k = max(ceil(n / target_cluster_size), 2), computed INSIDE the
-    plan (count aggregate -> broadcast scalar -> seed filter), so expected
-    cluster size — and with it the cost of any per-cluster quadratic
-    consumer — stays constant as the corpus grows instead of clusters
-    growing as n/k. Exact integer arithmetic ((n + t − 1) div t) keeps the
+    value k = max(ceil(n / target_cluster_size), 2), computed on the driver
+    from one count, so expected cluster size — and with it the cost of any
+    per-cluster quadratic consumer — stays constant as the corpus grows
+    instead of clusters growing as n/k. Exact integer arithmetic keeps the
     derived k reproducible in any engine.
 
     ``train_sample=S`` is the 100 TB training tier (same contract as
@@ -199,23 +202,13 @@ def kmeans_assignments(
         F.col(id_col).alias("vec_id"), quantize(vec_col).alias("qv")
     ).withColumn("pn2", qnorm2(F.col("qv")))
     if target_cluster_size is not None:
-        t = target_cluster_size
-        kdf = pts.agg(
-            F.expr(f"greatest((count(1) + {t - 1}) div {t}, 2)").alias(
-                "k_dyn"
-            )
+        k = max(-(-emb.count() // target_cluster_size), 2)
+    codebook = _codebook(
+        pts.where(F.col("vec_id") < k).select(
+            F.col("vec_id").alias("cell"),
+            F.col("qv").alias("cv"),
+            F.col("pn2").alias("cn2"),
         )
-        seeds = (
-            pts.crossJoin(F.broadcast(kdf))
-            .where(F.col("vec_id") < F.col("k_dyn"))
-            .drop("k_dyn")
-        )
-    else:
-        seeds = pts.where(F.col("vec_id") < k)
-    cents = seeds.select(
-        F.col("vec_id").alias("cell"),
-        F.col("qv").alias("cv"),
-        F.col("pn2").alias("cn2"),
     )
     if train_sample is not None:
         train = pts.where(
@@ -223,7 +216,7 @@ def kmeans_assignments(
         )
         if iters > 1 and train.isEmpty():
             # an empty sample would silently cascade to an empty result
-            # (empty update -> empty centroids -> final assign joins
+            # (empty update -> empty codebook -> final assign labels
             # nothing); fail loudly like the engine's other degenerate
             # cases instead
             raise ValueError(
@@ -232,25 +225,10 @@ def kmeans_assignments(
             )
     else:
         train = pts
-    # the packed final arg-min needs a static cell bound: k, unless the
-    # cell count is derived in-plan (k_dyn may exceed k) — then min_by
-    packed = not keep_vec and target_cluster_size is None
-    assigned = None
-    for it in range(iters):
-        last = it == iters - 1
-        assigned = _assign(
-            pts if last else train,
-            cents,
-            code_only=last and packed,
-            cell_bound=k,
-        )
-        if not last:
-            cents = _update(assigned, dim)
-    if keep_vec:
-        return assigned.select(
-            "vec_id", "qv", "pn2", F.col("cell").alias("cluster")
-        )
-    return assigned.select("vec_id", F.col("cell").alias("cluster"))
+    for _ in range(iters - 1):
+        codebook = _codebook(_update(_assign(train, codebook), dim))
+    assigned = _assign(pts, codebook, keep_vec)
+    return assigned.withColumnRenamed("cell", "cluster")
 
 
 def label_propagation_components(

@@ -61,22 +61,24 @@ def _assign_sub(
     code_only: bool = False,
     cell_bound: int | None = None,
 ) -> DataFrame:
-    """Nearest centroid per (vector, subspace) — clustering._assign with the
-    subspace id as an extra join/group key.
+    """Nearest centroid per (vector, subspace): every (subvector, centroid)
+    pair of the subspace scored through the broadcast centroids, then an
+    arg-min per (vector, subspace). (k-means assigns against a driver-held
+    codebook in one Arrow pass instead, ``clustering._assign``.)
 
     Arg-min as a partial-aggregatable ``min_by`` over the exact-integer
     ordering struct (d2, cell) — identical selection to the former
     row_number window (int64 comparisons; lexicographic struct order ==
     the window's two-key order), but the k-way score explosion collapses
     map-side and no per-partition sort runs (round-13 optimization,
-    guide §2.3; see clustering._assign).
+    guide §2.3).
 
     ``code_only=True`` (the corpus-linear ENCODE pass) additionally packs
     the (d2, cell) ordering into one int64 (``cell_bound`` = the caller's
     k) so the arg-min is a plain ``min(long)`` — codegen HashAggregate,
     no per-partition Sort of the k-way exploded scores, where the struct
-    ordering planned as SortAggregate (round-14; see clustering._assign
-    and functions/ordkey.py for the equivalence + in-plan guards)."""
+    ordering planned as SortAggregate (round-14; see functions/ordkey.py
+    for the equivalence + in-plan guards)."""
     scored = sub.join(F.broadcast(cents), "j").withColumn(
         "d2",
         F.col("sn2") - 2 * qdot_arrow(F.col("sv"), F.col("cv")) + F.col("cn2"),

@@ -312,7 +312,7 @@ def _ivf_cells(
     row_number window: cdot desc == -cdot asc in exact int64, cent_id
     asc tie-break), collapsing the n_centroids-way score explosion
     map-side with no per-partition sort (round-13 optimization, guide
-    §2.3; see clustering._assign).  ``keep > 1`` is only ever the QUERY
+    §2.3; see pq._assign_sub).  ``keep > 1`` is only ever the QUERY
     side (nprobe cells per query — bounded rows) and keeps the window,
     which a top-n-per-key genuinely needs."""
     scored = side.join(F.broadcast(cents)).withColumn(

@@ -552,9 +552,11 @@ def _kmeans_oracle(
 @query("kmeans_embeddings", oracle=_kmeans_oracle())
 def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two Lloyd iterations of k-means (k=8, first-k seeds) — the iterative-
-    algorithm pattern: per-iteration broadcast-assign + dim-wise aggregate,
-    exact integer distances and rounded-mean centroid updates keep every
-    iteration bit-reproducible (see operators.clustering)."""
+    algorithm pattern: per-iteration Arrow assign pass against the
+    driver-held codebook + dim-wise aggregate, exact integer distances and
+    rounded-mean centroid updates keep every iteration bit-reproducible
+    (see operators.clustering). The build collects the seed and updated
+    codebooks (k rows each); the returned frame is the final assign."""
     from mapreducemovieanalysis_cloud_spark.operators.clustering import (
         kmeans_assignments,
     )

@@ -384,13 +384,14 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     seniors beat it. Downstream curation drops the reported rows.
 
     Scale posture: clustering bounds the pair space to Σ n_c² instead of
-    n²; k is DERIVED from the corpus count inside the plan
-    (k = max(ceil(n/64), 2), ``target_cluster_size``) so expected cluster
+    n²; k is DERIVED from the corpus count, one count on the driver
+    (k = max(ceil(n/64), 2), ``target_cluster_size``), so expected cluster
     size — and the per-cluster self-join — stays constant as data grows
-    instead of clusters widening as n/k_fixed. The assignment lineage
-    carries (qv, pn2) through (``keep_vec=True``) so pairing re-uses one
-    corpus pass: one broadcast-assign per Lloyd iteration, then the
-    cluster-keyed self-join runs through ``operators.skew.salted_join`` —
+    instead of clusters widening as n/k_fixed; the k×d codebook that
+    grows with it is held on the driver. The assignment lineage carries
+    (qv, pn2) through (``keep_vec=True``) so pairing re-uses one corpus
+    pass: one Arrow assign pass per Lloyd iteration against the collected
+    codebook, then the cluster-keyed self-join runs through ``operators.skew.salted_join`` —
     a natural cluster 16× the target (skewed data land there regardless
     of k) spreads over the salt buckets instead of funneling one task —
     then one grouped agg. Salting only routes rows (row-identical join),
@@ -402,11 +403,10 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducemovieanalysis_cloud_spark.operators.skew import salted_join
     from mapreducemovieanalysis_cloud_spark.functions.vector import qdot_arrow
 
-    # localCheckpoint truncates the iterative Lloyd lineage before the
-    # self-join doubles it (the PageRank/triangle pattern): without it the
-    # pair join replays every assign/update round twice — 11 exchanges and
-    # 6 corpus scans in the audit; with it, the join reads the materialized
-    # assignment (id, qv, pn2, cluster) twice.
+    # localCheckpoint materializes the final assignment before the
+    # self-join reads it twice (the PageRank/triangle pattern): without it
+    # the pair join replays the corpus scan and the Arrow assign pass on
+    # both sides; with it, the join reads (id, qv, pn2, cluster) twice.
     a = (
         kmeans_assignments(
             load_table(spark, sf_dir, "embeddings"),

@@ -1,10 +1,14 @@
-"""Runtime domain guard on ``clustering._update``: a vector WIDER than the
-``dim`` upper bound must fail loudly instead of being silently truncated
-(matching the engine's other fail-fast guards, e.g. pagerank_weighted's
-int64 guard); shorter vectors keep the documented null-sliced tolerance."""
+"""Runtime domain guards of the k-means kernel. ``clustering._update``: a
+vector WIDER than the ``dim`` upper bound must fail loudly instead of being
+silently truncated (matching the engine's other fail-fast guards, e.g.
+pagerank_weighted's int64 guard); shorter vectors keep the documented
+null-sliced tolerance. ``clustering._assign``: NULL or ragged vectors and
+the int64 overflow bound raise named errors, ties go to the smaller cell,
+and an empty corpus assigns nothing."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -70,3 +74,98 @@ def test_derived_k_above_static_k_assigns_without_packed_guard(spark):
     assert len(got) == 100 and got == want
     assert set(got.values()) <= set(range(10))
     assert max(got.values()) >= 8  # a cell the static k would reject
+
+
+def _kmeans(spark, rows, **kw):
+    from mapreducemovieanalysis_cloud_spark.operators.clustering import (
+        kmeans_assignments,
+    )
+
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    return kmeans_assignments(emb, **kw)
+
+
+def test_ties_go_to_the_smaller_cell(spark):
+    # seeds 0..3 sit at the corners of a square; every other point is
+    # equidistant from two or four of them, so the arg-min is a pure tie
+    corners = [[0.0, 0.0], [2.0, 0.0], [0.0, 2.0], [2.0, 2.0]]
+    ties = {4: [1.0, 0.0], 5: [2.0, 1.0], 6: [1.0, 2.0], 7: [1.0, 1.0]}
+    rows = list(enumerate(corners)) + list(ties.items())
+    for keep_vec in (False, True):
+        got = {
+            r.vec_id: r.cluster
+            for r in _kmeans(
+                spark, rows, k=4, iters=1, dim=2, keep_vec=keep_vec
+            ).collect()
+        }
+        assert got == {0: 0, 1: 1, 2: 2, 3: 3, 4: 0, 5: 1, 6: 2, 7: 0}
+
+
+@pytest.mark.parametrize("keep_vec", [False, True])
+def test_empty_corpus_gives_empty_result(spark, keep_vec):
+    for kw in ({}, {"target_cluster_size": 4}):
+        out = _kmeans(spark, [], iters=2, dim=2, keep_vec=keep_vec, **kw)
+        assert out.collect() == []
+        assert "cluster" in out.columns
+
+
+@pytest.mark.parametrize(
+    "bad, match",
+    [
+        ((9, None), "clustering._assign: NULL vector"),
+        ((9, [1.0, None]), "clustering._assign: NULL vector"),
+        # ragged within a batch, or a batch of its own that is wider
+        # than the codebook, depending on how the rows are partitioned
+        (
+            (9, [1.0, 2.0, 3.0]),
+            "clustering._assign: (ragged vectors|vector width 3, expected 2)",
+        ),
+    ],
+)
+def test_null_or_ragged_vectors_raise(spark, bad, match):
+    rows = [(i, [float(i), 1.0]) for i in range(8)] + [bad]
+    with pytest.raises(Exception, match=match):
+        _kmeans(spark, rows, k=2, iters=1, dim=2).collect()
+
+
+def test_codebook_width_mismatch_raises(spark):
+    # every point 3 wide against a 2-wide codebook (the update slices a
+    # cell to its narrowest member, here the 2-wide seed)
+    from mapreducemovieanalysis_cloud_spark.operators.clustering import (
+        _assign,
+    )
+
+    pts = spark.createDataFrame(
+        [(1, [1, 2, 3], 14)], "vec_id long, qv array<long>, pn2 long"
+    )
+    codebook = (np.array([0]), np.array([[1, 1]]), np.array([2]))
+    with pytest.raises(Exception, match="vector width 3, expected 2"):
+        _assign(pts, codebook).collect()
+
+
+def test_int64_overflow_bound_raises(spark):
+    # 2000.0 quantizes to 2e9: every norm fits in int64 (4e18), but
+    # d*(max|x| + max|c|)^2 = 1.6e19 >= 2^63 — a matmul term could wrap
+    rows = [(0, [2000.0]), (1, [-2000.0]), (2, [1.0])]
+    with pytest.raises(Exception, match="int64 overflow bound violated"):
+        _kmeans(spark, rows, k=2, iters=1, dim=1).collect()
+    # the same shape within the bound assigns normally
+    ok = [(0, [1000.0]), (1, [-1000.0]), (2, [1.0])]
+    out = _kmeans(spark, ok, k=2, iters=1, dim=1)
+    assert {r.vec_id: r.cluster for r in out.collect()} == {0: 0, 1: 1, 2: 0}
+
+
+def test_list_matrix_decodes_sliced_and_empty_batches():
+    import pyarrow as pa
+
+    from mapreducemovieanalysis_cloud_spark.functions.vector import (
+        list_matrix,
+    )
+
+    arr = pa.array([[1, 2], [3, 4], [5, 6], [7, 8]], pa.list_(pa.int64()))
+    assert list_matrix(arr.slice(1, 2)).tolist() == [[3, 4], [5, 6]]
+    assert list_matrix(arr.slice(4), 2).shape == (0, 2)
+    with pytest.raises(ValueError, match="k: ragged vectors"):
+        list_matrix(pa.array([[1, 2], [3]]), label="k")
+    with pytest.raises(ValueError, match="k: vector width 2, expected 3"):
+        list_matrix(arr, 3, "k")

@@ -432,3 +432,15 @@ def test_kmeans_train_sample_none_unchanged(spark, sf_dir):
     q = registry.queries()["kmeans_embeddings"]
     sql = registry.oracle_sql()["kmeans_embeddings"]
     assert_matches_oracle(q(spark, sf_dir), sql, sf_dir)
+
+
+def test_warm_semantic_dedup_build_runs_at_most_six_spark_jobs(spark, sf_dir):
+    """Building ``semantic_dedup`` runs only its driver-side steps: the
+    derived-k count, the seed and updated codebook collects (k rows each)
+    and the localCheckpoint — the Lloyd assign passes are narrow maps
+    inside those jobs, not joins of their own."""
+    from tests.test_round4m import _build_jobs
+
+    q = registry.queries()["semantic_dedup"]
+    q(spark, sf_dir)  # warm
+    assert _build_jobs(spark, lambda: q(spark, sf_dir)) <= 6

@@ -8,11 +8,11 @@ round, converted into CI facts.
 * Driver-side actions (``.collect()`` / ``.first()``) are allowed ONLY
   at the documented bounded-by-design sites — each pulls a
   catalog/constant-sized result (a 2,080-cell Gram matrix, a BPE merge
-  table, store-meta singletons, an IVF probe cell list, a k-derivation
-  scalar, the pagerank_weighted domain-guard scalars).  A new site must
-  be justified and added HERE, never slipped in: an undocumented
-  collect in an operator is how a 100 TB job quietly becomes a driver
-  OOM.
+  table, store-meta singletons, an IVF probe cell list, a k-means
+  codebook, a convergence signature, the pagerank_weighted domain-guard
+  scalars).  A new site must be justified and added HERE, never slipped
+  in: an undocumented collect in an operator is how a 100 TB job quietly
+  becomes a driver OOM.
 * No ``.toPandas()`` in the package at all (same cliff, bigger blast
   radius).
 
@@ -36,8 +36,9 @@ DRIVER_ACTION_WHITELIST = {
     # 2,080-cell int64 Gram matrix (d*(d+1)/2 at d=64) for the driver
     # eigendecomposition — catalog-sized by construction
     "operators/pca.py": 2,
-    # k-derivation scalar (sampled distinct count -> k)
-    "operators/clustering.py": 1,
+    # star_components' O(1)-row convergence signature + the Lloyd
+    # codebook (k centroid rows per iteration)
+    "operators/clustering.py": 2,
     # BPE merge table: vocab-sized type table, bounded by n_merges
     "operators/bpe.py": 2,
     # the one stored-layout meta reader (1-row frame, shared with the
