@@ -109,56 +109,25 @@ N_HEAVY_MEDIAN3 = 10
 # count in ~1.05 s / 7 stages vs ~1.8 s / 18.1 MB shuffle with the edge
 # derivation inlined) is tracked round-over-round under
 # "store_consumer_queries" instead of being claimed once in SCALE.md.
-# Resolved from the registry once registered (the committed r11/r12
-# windows), else from the staged module — the reading exists before and
-# after promotion.  Median-of-3, warm store (the warm-up shot builds it);
-# NOT summed into "value"/"all_queries_total_sec" so the historical
-# totals stay comparable.
+# Resolved from the registry; a name missing from it is reported under
+# "store_consumer_unresolved".  Median-of-3, warm store (the warm-up shot
+# builds it); NOT summed into "value"/"all_queries_total_sec" so the
+# historical totals stay comparable.
 STORE_CONSUMER = [
     "incremental_graph_edges",
     "stored_graph_triangles",
-    # round-14 staged: the DIRECTED-store consumer — tracked from the
-    # round it was built so its warm-read advantage over the 41 MB
-    # inline derivation (SCALE.md round-11 probes) has a history by the
-    # time it registers
+    # the DIRECTED-store consumer: its warm-read advantage over the
+    # 41 MB inline derivation (SCALE.md round-11 probes)
     "stored_hits_authority",
 ]
 
 
-def _staged_modules() -> list[str]:
-    """Every ``round*_staged`` module in the queries package, discovered
-    from disk so a future wave (round15_staged, ...) is picked up without
-    touching this file (r10 advisor item 1; shared discovery surface)."""
-    from mapreducemovieanalysis_cloud_spark.queries import staged_modules
-
-    return staged_modules()
-
-
 def _resolve_store_consumers(qs: dict) -> tuple[dict, list[str]]:
-    """Resolve each STORE_CONSUMER name from the registry, else from any
-    staged module; names resolving NOWHERE are returned as warnings so a
-    silently-vanished reading is visible in the artifact instead of just
-    absent (r10 advisor item 1).  Exceptions are per-module and broad:
-    one broken staged module must not kill the unattended bench."""
-    out: dict = {}
-    missing: list[str] = []
-    for name in STORE_CONSUMER:
-        if name in qs:
-            out[name] = qs[name]
-            continue
-        for mod in _staged_modules():
-            try:
-                m = __import__(
-                    "mapreducemovieanalysis_cloud_spark.queries." + mod,
-                    fromlist=[mod],
-                )
-            except Exception:
-                continue
-            if name in getattr(m, "STAGED_QUERIES", {}):
-                out[name] = m.STAGED_QUERIES[name]
-                break
-        else:
-            missing.append(name)
+    """Resolve each STORE_CONSUMER name from the registry dict ``qs``;
+    names missing from it are returned as warnings so a silently-vanished
+    reading is visible in the artifact instead of just absent."""
+    out = {name: qs[name] for name in STORE_CONSUMER if name in qs}
+    missing = [name for name in STORE_CONSUMER if name not in qs]
     return out, missing
 
 
@@ -177,13 +146,9 @@ N_COMPACTION_EPOCHS = 24
 # is BOUNDED so the unattended driver bench always completes: ~3 min
 # covers a just-killed prior JVM's loadavg decay (1-min EMA) without
 # eating the round's budget.
-LOAD_GATE_THRESHOLD = float(
-    os.environ.get("SPARK_GRAFT_LOAD_GATE_THRESHOLD", "1.5")
-)
-LOAD_GATE_MAX_WAIT_S = float(
-    os.environ.get("SPARK_GRAFT_LOAD_GATE_MAX_WAIT_S", "180")
-)
-LOAD_GATE_POLL_S = float(os.environ.get("SPARK_GRAFT_LOAD_GATE_POLL_S", "15"))
+LOAD_GATE_THRESHOLD = 1.5
+LOAD_GATE_MAX_WAIT_S = 180.0
+LOAD_GATE_POLL_S = 15.0
 
 # Rolling cap on the readings array: a day's sweeps are 2-6 entries,
 # so 20 keeps several rounds of history without growing unboundedly.
@@ -282,7 +247,7 @@ def _machine_load() -> dict:
 # before the JVM starts turns "was today's machine the same speed as
 # yesterday's?" into a field: family-uniform drift that tracks the
 # canary rate is the machine; drift that doesn't is the code.
-CANARY_MB = int(os.environ.get("SPARK_GRAFT_CANARY_MB", "256"))
+CANARY_MB = 256
 
 
 def _speed_canary(n_mb: int = None) -> dict:
@@ -371,9 +336,7 @@ def _reading_summary(
 # stamp ``canary_degraded`` so the reading self-disqualifies from seed
 # adoption (tools/adopt_bench.py refuses it without --force) while the
 # driver's artifact slot still gets filled.
-CANARY_GATE_RATIO = float(
-    os.environ.get("SPARK_GRAFT_CANARY_GATE_RATIO", "0.6")
-)
+CANARY_GATE_RATIO = 0.6
 
 
 def _best_prior_agg(readings) -> float:
@@ -623,13 +586,9 @@ def main() -> None:
         result["load_contaminated"] = True
     if canary_degraded:
         result["canary_degraded"] = True
-    try:
-        consumers, missing = _resolve_store_consumers(qs)
-        if missing:
-            result["store_consumer_unresolved"] = missing
-    except Exception as exc:  # never crash the unattended bench
-        consumers = {}
-        result["store_consumer_error"] = repr(exc)[:200]
+    consumers, missing = _resolve_store_consumers(qs)
+    if missing:
+        result["store_consumer_unresolved"] = missing
     store_timings, store_errors = _time_store_consumers(
         spark, sf_dir, consumers
     )

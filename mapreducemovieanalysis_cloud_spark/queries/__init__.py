@@ -1,52 +1,2 @@
-"""Query modules register through ``registry.query``; staging waves
-queue here as ``round*_staged`` modules until their committed
-registration round.
-
-``staged_modules()`` / ``staged_queries()`` are THE discovery surface
-for everything that must see staged candidates before they register
-(bench.py's store-consumer instrument, tools/probe10x.py, the
-empty/tiny boundary sweeps): modules are found on DISK, so a new wave
-is covered everywhere by existing, with no per-consumer list to forget
-(r10 advisor item 1, generalized)."""
-
-from __future__ import annotations
-
-import glob
-import importlib
-import os
-import re
-
-
-def staged_modules() -> list[str]:
-    """Every ``round*_staged`` module name in this package, ordered by
-    ROUND NUMBER: ``staged_queries()`` resolves duplicate names
-    first-wave-wins (setdefault), and lexicographic sorting would put
-    round7-9 AFTER round10-14, silently inverting that precedence to
-    newest-wave-wins (r11 advisor item 3 — latent, no duplicates
-    exist today)."""
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    names = [
-        os.path.splitext(os.path.basename(p))[0]
-        for p in glob.glob(os.path.join(pkg_dir, "round*_staged.py"))
-    ]
-    # tolerate a digitless round*_staged.py (r12 advisor item 2): it
-    # sorts first instead of crashing discovery for every consumer
-    def _round_num(m: str) -> int:
-        match = re.search(r"\d+", m)
-        return int(match.group()) if match else 0
-
-    return sorted(names, key=_round_num)
-
-
-def staged_queries() -> dict:
-    """name -> (spark, sf_dir) -> DataFrame across every staged wave
-    (registered-or-not; consumers setdefault under the live registry so
-    registration always wins)."""
-    out: dict = {}
-    for mod in staged_modules():
-        m = importlib.import_module(
-            "mapreducemovieanalysis_cloud_spark.queries." + mod
-        )
-        for k, v in getattr(m, "STAGED_QUERIES", {}).items():
-            out.setdefault(k, v)
-    return out
+"""Query modules: each registers its queries through ``registry.query``
+and is imported by ``registry._load_all``."""

@@ -1,17 +1,10 @@
-"""Round-10 query wave — REGISTERED as of round 10 (the freeze
-lifted per the committed round-9 ledger plan).
+"""Round-10 query wave, registered through ``registry.query`` in
+round 10.
 
-History: built and oracle-parity-tested during round 8 while round 8's
-driver window was rotation-only and round 9's 50 slots were already
-fully committed (36 r04 rows + the 8 round8_staged + the 6
-round9_staged candidates, SURVEY.md round-8 ledger item 7).  Round 10
-promoted them: every ``_staged`` entry now ALSO registers through
-``registry.query``, so the driver's correctness gate covers them
-directly.  The STAGED_QUERIES/STAGED_ORACLES dicts remain as the
-module's index (the parity tests iterate them);
-``tests/test_round10_staged.py::test_staged_are_registered`` pins that
-every entry is live in the registry with the identical callable and
-oracle.
+Built and oracle-parity-tested in round 8 while round 8's driver window
+was rotation-only and round 9's 50 slots were already fully committed
+(SURVEY.md round-8 ledger item 7).  ``tests/test_round10_staged.py``
+runs the driver-identical Spark-vs-DuckDB parity for every entry.
 
 What the wave adds:
 
@@ -48,19 +41,6 @@ from mapreducemovieanalysis_cloud_spark.functions.rounding import (
 
 from mapreducemovieanalysis_cloud_spark.registry import query
 from mapreducemovieanalysis_cloud_spark.sources.readers import load_table
-
-STAGED_ORACLES: dict[str, str] = {}
-STAGED_QUERIES: dict = {}
-
-
-def _staged(name: str, oracle: str):
-    def deco(fn):
-        STAGED_QUERIES[name] = fn
-        STAGED_ORACLES[name] = oracle
-        return query(name, oracle)(fn)
-
-    return deco
-
 
 # ---- Poisson-bootstrap confidence bands -------------------------------------
 
@@ -113,7 +93,7 @@ def _bootstrap_oracle(b: int = _BOOT_B) -> str:
     """
 
 
-@_staged("bootstrap_mean_chars_ci", oracle=_bootstrap_oracle())
+@query("bootstrap_mean_chars_ci", oracle=_bootstrap_oracle())
 def bootstrap_mean_chars_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source mean document length with a deterministic
     Poisson-bootstrap 90% confidence band (B = {b} replicas) — the
@@ -206,7 +186,7 @@ _SPAN_ORACLE = r"""
     """
 
 
-@_staged("decontaminate_span_report", oracle=_SPAN_ORACLE)
+@query("decontaminate_span_report", oracle=_SPAN_ORACLE)
 def decontaminate_span_report(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -270,7 +250,7 @@ _REPEAT_ORACLE = rf"""
     """
 
 
-@_staged("source_repeat_schedule", oracle=_REPEAT_ORACLE)
+@query("source_repeat_schedule", oracle=_REPEAT_ORACLE)
 def source_repeat_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget repeat planner: given a training budget of
     {bx:.1f}x the corpus and a {me:.1f}-epoch per-source repeat cap
@@ -355,7 +335,7 @@ def _incremental_lm_oracle() -> str:
     return _NGRAM_LM_ORACLE
 
 
-@_staged("incremental_lm_scores", oracle=_incremental_lm_oracle())
+@query("incremental_lm_scores", oracle=_incremental_lm_oracle())
 def incremental_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scores every document against an INCREMENTALLY-maintained
     bigram add-1 LM: the corpus arrives as two batches (doc_id
@@ -442,7 +422,7 @@ _DRIFT_ORACLE = """
     """
 
 
-@_staged("embedding_batch_drift", oracle=_DRIFT_ORACLE)
+@query("embedding_batch_drift", oracle=_DRIFT_ORACLE)
 def embedding_batch_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding drift monitor: split the vectors into a reference and
     a current window (vec_id parity stands in for yesterday/today) and
@@ -601,7 +581,7 @@ def _ab_oracle(b: int = _BOOT_B) -> str:
     """
 
 
-@_staged("ab_uplift_ci", oracle=_ab_oracle())
+@query("ab_uplift_ci", oracle=_ab_oracle())
 def ab_uplift_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic A/B readout: md5-hash documents into two arms,
     report each arm's mean metric and the uplift (A - B) with a

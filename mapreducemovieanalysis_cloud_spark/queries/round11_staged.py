@@ -1,17 +1,10 @@
-"""Round-11 query wave — REGISTERED as of round 11 (the freeze lifted
-per the committed round-10 ledger plan).
+"""Round-11 query wave, registered through ``registry.query`` in
+round 11.
 
-History: built and oracle-parity-tested during round 9 while round 9's
-50 driver slots were fully committed (36 r04 rotation rows + the
-promoted round8/round9 waves) and round 10's plan was already fixed
-(the 6 round10_staged candidates + post-r09 rotation debt).  Round 11
-promoted them: every ``_staged`` entry now ALSO registers through
-``registry.query``, so the driver's correctness gate covers them
-directly.  The STAGED_QUERIES/STAGED_ORACLES dicts remain as the
-module's index (the parity tests iterate them);
-``tests/test_round11_staged.py::test_staged_are_registered`` pins that
-every entry is live in the registry with the identical callable and
-oracle.
+Built and oracle-parity-tested in round 9 while round 9's 50 driver
+slots were fully committed and round 10's plan was already fixed.
+``tests/test_round11_staged.py`` runs the driver-identical
+Spark-vs-DuckDB parity for every entry.
 
 What the wave adds (new capabilities, not variants):
 
@@ -61,19 +54,6 @@ from mapreducemovieanalysis_cloud_spark.operators import sketches
 from mapreducemovieanalysis_cloud_spark.registry import query
 from mapreducemovieanalysis_cloud_spark.sources.readers import load_table
 
-STAGED_ORACLES: dict[str, str] = {}
-STAGED_QUERIES: dict = {}
-
-
-def _staged(name: str, oracle: str):
-    def deco(fn):
-        STAGED_QUERIES[name] = fn
-        STAGED_ORACLES[name] = oracle
-        return query(name, oracle)(fn)
-
-    return deco
-
-
 # ---- chi-square independence: lang x source ----------------------------------
 
 _CHISQ_ORACLE = """
@@ -103,7 +83,7 @@ _CHISQ_ORACLE = """
     """
 
 
-@_staged("chisq_lang_source", oracle=_CHISQ_ORACLE)
+@query("chisq_lang_source", oracle=_CHISQ_ORACLE)
 def chisq_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson chi-square independence audit of the (lang, source)
     contingency table: per cell the observed count, the
@@ -227,7 +207,7 @@ _BENFORD_ORACLE = f"""
     """
 
 
-@_staged("benford_price_audit", oracle=_BENFORD_ORACLE)
+@query("benford_price_audit", oracle=_BENFORD_ORACLE)
 def benford_price_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford's-law leading-digit audit of o_totalprice per order
     priority: per (priority, digit 1..9) the observed share vs the
@@ -381,7 +361,7 @@ _CUSUM_ORACLE = f"""
     """
 
 
-@_staged("cusum_changepoint_events", oracle=_CUSUM_ORACLE)
+@query("cusum_changepoint_events", oracle=_CUSUM_ORACLE)
 def cusum_changepoint_events(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -485,7 +465,7 @@ _SEASONAL_ORACLE = f"""
     """
 
 
-@_staged("seasonal_hour_decompose", oracle=_SEASONAL_ORACLE)
+@query("seasonal_hour_decompose", oracle=_SEASONAL_ORACLE)
 def seasonal_hour_decompose(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -604,7 +584,7 @@ _AA_ORACLE = f"""
     """
 
 
-@_staged("adamic_adar_suppliers", oracle=_AA_ORACLE)
+@query("adamic_adar_suppliers", oracle=_AA_ORACLE)
 def adamic_adar_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{k} Adamic-Adar link predictions on the supplier
     co-occurrence graph (same edge definition as
@@ -692,7 +672,7 @@ _ANF_ORACLE = f"""
     """
 
 
-@_staged("anf_reach_suppliers", oracle=_ANF_ORACLE)
+@query("anf_reach_suppliers", oracle=_ANF_ORACLE)
 def anf_reach_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate neighborhood function over the supplier
     co-occurrence graph: per node and hop 1..{h}, a Flajolet-Martin
@@ -737,7 +717,7 @@ _INC_GRAPH_ORACLE = """
     """
 
 
-@_staged("incremental_graph_edges", oracle=_INC_GRAPH_ORACLE)
+@query("incremental_graph_edges", oracle=_INC_GRAPH_ORACLE)
 def incremental_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The supplier co-occurrence edge list served from an INCREMENTALLY
     maintained pair-count store: the fact table arrives as two batches

@@ -1,12 +1,8 @@
-"""Round-12 promotions — staged in round 10 under the full contract,
-REGISTERED in round 12 per the committed window plan (the round-10/11
-ledgers): every ``_staged`` entry now ALSO registers through
-``registry.query``, so the driver's correctness gate covers them
-directly.  ``tests/test_round12_staged.py`` runs the driver-identical
-Spark-vs-DuckDB parity plus batch-split-invariance, retry-idempotence,
-and python brute-force replays;
-``tests/test_round12_staged.py::test_staged_are_registered`` pins that
-the registry serves the IDENTICAL callables and oracle strings.
+"""Round-12 query wave, built in round 10 and registered through
+``registry.query`` in round 12 per the committed window plan (the
+round-10/11 ledgers).  ``tests/test_round12_staged.py`` runs the
+driver-identical Spark-vs-DuckDB parity plus batch-split-invariance,
+retry-idempotence, and python brute-force replays.
 
 The wave's theme: the INCREMENTAL-STORE family closes over sketches
 and consumers.  The engine already maintains incremental stores for
@@ -64,19 +60,6 @@ from pyspark.sql import functions as F
 from mapreducemovieanalysis_cloud_spark.registry import query
 from mapreducemovieanalysis_cloud_spark.sources.readers import load_table
 
-STAGED_ORACLES: dict[str, str] = {}
-STAGED_QUERIES: dict = {}
-
-
-def _staged(name: str, oracle: str):
-    def deco(fn):
-        STAGED_QUERIES[name] = fn
-        STAGED_ORACLES[name] = oracle
-        return query(name, oracle)(fn)
-
-    return deco
-
-
 def _store_path(spark, sf_dir: str, family: str, version: str,
                 table: str, build_fn) -> str:
     """Build-if-absent a fingerprint+version-keyed store — the shared
@@ -104,7 +87,7 @@ def _stored_triangle_oracle() -> str:
     return _TRIANGLE_ORACLE
 
 
-@_staged("stored_graph_triangles", oracle=_stored_triangle_oracle())
+@query("stored_graph_triangles", oracle=_stored_triangle_oracle())
 def stored_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle participation counts served from the INCREMENTALLY
     maintained co-occurrence pair-count store (round11_staged's
@@ -171,7 +154,7 @@ def _fm_oracle(registers: int = _FM_R) -> str:
     """
 
 
-@_staged("incremental_distinct_users", oracle=_fm_oracle())
+@query("incremental_distinct_users", oracle=_fm_oracle())
 def incremental_distinct_users(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -235,7 +218,7 @@ def _kmv_oracle() -> str:
     return _BOTTOMK_ORACLE
 
 
-@_staged("incremental_source_overlap", oracle=_kmv_oracle())
+@query("incremental_source_overlap", oracle=_kmv_oracle())
 def incremental_source_overlap(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -335,7 +318,7 @@ def _fm_overlap_oracle(registers: int = _FM_R) -> str:
     """
 
 
-@_staged("fm_audience_overlap", oracle=_fm_overlap_oracle())
+@query("fm_audience_overlap", oracle=_fm_overlap_oracle())
 def fm_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-type audience overlap estimated PURELY from the stored FM
     register masks — the sketch-algebra payoff on top of
@@ -434,7 +417,7 @@ def _mlm_oracle() -> str:
     """
 
 
-@_staged("masked_lm_dataset", oracle=_mlm_oracle())
+@query("masked_lm_dataset", oracle=_mlm_oracle())
 def masked_lm_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BERT-style masked-LM training pairs over the corpus-trained
     top-40 vocabulary: per document, the (input_ids, labels) CSV pair a
@@ -487,7 +470,7 @@ _FRAME_DEDUP_ORACLE = """
     """
 
 
-@_staged("multimodal_frame_dedup", oracle=_FRAME_DEDUP_ORACLE)
+@query("multimodal_frame_dedup", oracle=_FRAME_DEDUP_ORACLE)
 def multimodal_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-media near-duplicate pairs via exact frame fingerprints
     (operators/multimodal.frame_dedup_pairs) — the video-dedup staple
@@ -576,7 +559,7 @@ def _span_oracle() -> str:
     """
 
 
-@_staged("span_corruption_dataset", oracle=_span_oracle())
+@query("span_corruption_dataset", oracle=_span_oracle())
 def span_corruption_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5-style span-corruption training pairs over the corpus-trained
     top-40 vocabulary (operators/curation.span_corruption_dataset):

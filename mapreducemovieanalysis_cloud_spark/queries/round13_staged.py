@@ -1,11 +1,7 @@
-"""Round-13 promotions — staged in round 10 under the full contract,
-REGISTERED in round 13 per the committed window plan (the round-10/12
-ledgers): every ``_staged`` entry now ALSO registers through
-``registry.query``, so the driver's correctness gate covers them
-directly.  ``tests/test_round13_staged.py`` runs the driver-identical
-Spark-vs-DuckDB parity plus behavioral pins;
-``tests/test_round13_staged.py::test_staged_are_registered`` pins that
-the registry serves the IDENTICAL callables and oracle strings.
+"""Round-13 query wave, built in round 10 and registered through
+``registry.query`` in round 13 per the committed window plan (the
+round-10/12 ledgers).  ``tests/test_round13_staged.py`` runs the
+driver-identical Spark-vs-DuckDB parity plus behavioral pins.
 
 What the wave adds (three threads the repo's forward plan left open):
 
@@ -49,19 +45,6 @@ from mapreducemovieanalysis_cloud_spark.queries.pipeline_queries import (
 )
 from mapreducemovieanalysis_cloud_spark.registry import query
 from mapreducemovieanalysis_cloud_spark.sources.readers import load_table
-
-STAGED_ORACLES: dict[str, str] = {}
-STAGED_QUERIES: dict = {}
-
-
-def _staged(name: str, oracle: str):
-    def deco(fn):
-        STAGED_QUERIES[name] = fn
-        STAGED_ORACLES[name] = oracle
-        return query(name, oracle)(fn)
-
-    return deco
-
 
 # ---- hybrid lexical+semantic retrieval via reciprocal-rank fusion -----------
 
@@ -107,7 +90,7 @@ def _rrf_oracle() -> str:
     """
 
 
-@_staged("hybrid_search_rrf", oracle=_rrf_oracle())
+@query("hybrid_search_rrf", oracle=_rrf_oracle())
 def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal-rank fusion of the two registered retrieval paths:
     the BM25 lexical top-50 (ranking.bm25_scores, the bm25_rank terms
@@ -201,7 +184,7 @@ def _inc_cms_oracle() -> str:
     """
 
 
-@_staged("incremental_cms_hitters", oracle=_inc_cms_oracle())
+@query("incremental_cms_hitters", oracle=_inc_cms_oracle())
 def incremental_cms_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy-hitter users served from the INCREMENTALLY maintained
     count-min store (operators/sketches.incremental_cms_append): two
@@ -281,7 +264,7 @@ def _inc_hist_oracle() -> str:
     """
 
 
-@_staged("incremental_hist_percentiles", oracle=_inc_hist_oracle())
+@query("incremental_hist_percentiles", oracle=_inc_hist_oracle())
 def incremental_hist_percentiles(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -359,7 +342,7 @@ _HITS_ORACLE = f"""
     """
 
 
-@_staged("hits_trade_authority", oracle=_HITS_ORACLE)
+@query("hits_trade_authority", oracle=_HITS_ORACLE)
 def hits_trade_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two unnormalized HITS iterations over the DIRECTED
     customer->supplier purchase graph (lineitem joined to orders,
@@ -433,7 +416,7 @@ _KTRUSS_ORACLE = f"""
     """
 
 
-@_staged("ktruss_suppliers", oracle=_KTRUSS_ORACLE)
+@query("ktruss_suppliers", oracle=_KTRUSS_ORACLE)
 def ktruss_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """4-truss edges of the supplier co-occurrence graph (min_shared=20
     co-orders, the registered triangle/k-core graph): two fixed
@@ -484,7 +467,7 @@ def _skipgram_oracle() -> str:
     """
 
 
-@_staged("skipgram_pair_topk", oracle=_skipgram_oracle())
+@query("skipgram_pair_topk", oracle=_skipgram_oracle())
 def skipgram_pair_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-40 windowed token co-occurrence pairs (window +-2, classic
     1/d distance weight in integer micro units) — the GloVe/word2vec
@@ -535,7 +518,7 @@ def _pref_oracle() -> str:
     """
 
 
-@_staged("preference_pairs_by_source", oracle=_pref_oracle())
+@query("preference_pairs_by_source", oracle=_pref_oracle())
 def preference_pairs_by_source(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

@@ -1,12 +1,10 @@
-"""Round-14 REGISTRY CANDIDATES — implemented, oracle-backed,
-pytest-verified, NOT registered: the round-11/12/13 driver windows are
-fully committed (each promotes its own staged wave + the stalest
-rotation rows, count pins 263 → 270 → 277), so this wave queues for
-round 14.  Same contract as every staging wave: ready-to-promote
-(query_fn, oracle_sql) pairs in the exact shape ``registry.query``
-expects; ``tests/test_round14_staged.py`` runs the driver-identical
-Spark-vs-DuckDB parity plus planted behavioral fixtures and independent
-python brute-force replays.
+"""Round-14 query wave, registered through ``registry.query``.
+
+Built while the round-11/12/13 driver windows were fully committed
+(each registered its own wave + the stalest rotation rows, count pins
+263 -> 270 -> 277).  ``tests/test_round14_staged.py`` runs the
+driver-identical Spark-vs-DuckDB parity plus planted behavioral
+fixtures and independent python brute-force replays.
 
 What the wave adds (new capabilities, not variants — the round-10
 ledger's round-14 shortlist, executed):
@@ -56,20 +54,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mapreducemovieanalysis_cloud_spark.queries.round13_staged import (
+    _HITS_ORACLE,
+)
+from mapreducemovieanalysis_cloud_spark.registry import query
 from mapreducemovieanalysis_cloud_spark.sources.readers import load_table
-
-STAGED_ORACLES: dict[str, str] = {}
-STAGED_QUERIES: dict = {}
-
-
-def _staged(name: str, oracle: str):
-    def deco(fn):
-        STAGED_QUERIES[name] = fn
-        STAGED_ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 # ---- incremental DIRECTED customer->supplier edge store ----------------------
 
@@ -132,7 +121,7 @@ def directed_store_path(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-@_staged("incremental_directed_edges", oracle=_DIR_EDGES_ORACLE)
+@query("incremental_directed_edges", oracle=_DIR_EDGES_ORACLE)
 def incremental_directed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The directed customer->supplier edge list (who buys from whom,
     weighted by linking-order count) served from an INCREMENTALLY
@@ -177,19 +166,11 @@ incremental_directed_edges.__doc__ = incremental_directed_edges.__doc__.format(
 _HITS_TOPK = 25
 
 
-def _stored_hits_oracle() -> str:
-    """The round-13 HITS oracle VERBATIM (byte-pinned by test): the
-    stored edge list at min_count=1 is exactly the distinct
-    lineitem⋈orders pair set, so HITS from the store must equal HITS
-    from the inline derivation."""
-    from mapreducemovieanalysis_cloud_spark.queries.round13_staged import (
-        STAGED_ORACLES as _R13,
-    )
-
-    return _R13["hits_trade_authority"]
-
-
-@_staged("stored_hits_authority", oracle=_stored_hits_oracle())
+# The oracle is the round-13 HITS oracle VERBATIM (byte-pinned by test):
+# the stored edge list at min_count=1 is exactly the distinct
+# lineitem⋈orders pair set, so HITS from the store must equal HITS from
+# the inline derivation.
+@query("stored_hits_authority", oracle=_HITS_ORACLE)
 def stored_hits_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two unnormalized HITS iterations served from the INCREMENTALLY
     maintained directed edge store (directed_store_path — one store per
@@ -271,7 +252,7 @@ def _pagerank_weighted_oracle(
     )
 
 
-@_staged("pagerank_weighted_stored", oracle=_pagerank_weighted_oracle())
+@query("pagerank_weighted_stored", oracle=_pagerank_weighted_oracle())
 def pagerank_weighted_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank ({it} quantized-integer iterations, d=0.{d})
     over the supplier co-occurrence graph served from the round-11
@@ -338,7 +319,7 @@ _COMP_ORACLE = f"""
     """
 
 
-@_staged("components_stored_edges", oracle=_COMP_ORACLE)
+@query("components_stored_edges", oracle=_COMP_ORACLE)
 def components_stored_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components of the supplier co-occurrence graph served
     from the round-11 pair-count store: the trade-community partition
@@ -407,7 +388,7 @@ _ZIPF_ORACLE = rf"""
     """
 
 
-@_staged("zipf_slope_tokens", oracle=_ZIPF_ORACLE)
+@query("zipf_slope_tokens", oracle=_ZIPF_ORACLE)
 def zipf_slope_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fitted Zipf exponent per source: least-squares slope of
     ln(count) on ln(rank) over the top-{k} token head — the
@@ -482,7 +463,7 @@ _FUNNEL_ORACLE = f"""
     """
 
 
-@_staged("session_funnel_steps", oracle=_FUNNEL_ORACLE)
+@query("session_funnel_steps", oracle=_FUNNEL_ORACLE)
 def session_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered view->click->purchase funnel WITHIN a 30-minute-gap
     session: the number of SESSIONS whose first stage-i event strictly
@@ -525,7 +506,7 @@ _TRANS_ORACLE = f"""
     """
 
 
-@_staged("session_transition_matrix", oracle=_TRANS_ORACLE)
+@query("session_transition_matrix", oracle=_TRANS_ORACLE)
 def session_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix over consecutive
     SAME-SESSION events (operators/timeseries.session_transition_counts):

@@ -1,15 +1,10 @@
-"""Round-7 query wave — REGISTERED as of round 7 (the freeze lifted).
+"""Round-7 query wave, registered through ``registry.query`` in round 7.
 
-History: these were built and oracle-parity-tested during round 6 while
-the registry was frozen at 213 (a new entry would have hijacked a
-rotation slot in the driver's stalest-first window; SURVEY.md round-6
-ledger items 8-10).  Round 7 promoted them per the r06 verdict item 1:
-every ``_staged`` entry now ALSO registers through ``registry.query``,
-so the driver's correctness gate covers them directly.  The
-STAGED_QUERIES/STAGED_ORACLES dicts remain as the module's index (the
-parity tests iterate them), but they are no longer a separate contract
-— ``tests/test_round7_staged.py::test_staged_are_registered`` pins that
-every entry is live in the registry with the identical oracle.
+Built and oracle-parity-tested in round 6 while the registry was frozen
+at 213 (a new entry would have hijacked a rotation slot in the driver's
+stalest-first window; SURVEY.md round-6 ledger items 8-10).
+``tests/test_round7_staged.py`` runs the driver-identical
+Spark-vs-DuckDB parity for every entry.
 """
 
 from __future__ import annotations
@@ -18,19 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from mapreducemovieanalysis_cloud_spark.registry import query
 from mapreducemovieanalysis_cloud_spark.sources.readers import load_table
-
-STAGED_ORACLES: dict[str, str] = {}
-STAGED_QUERIES: dict = {}
-
-
-def _staged(name: str, oracle: str):
-    def deco(fn):
-        STAGED_QUERIES[name] = fn
-        STAGED_ORACLES[name] = oracle
-        return query(name, oracle)(fn)
-
-    return deco
-
 
 _NGRAM_LM_ORACLE = r"""
     WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
@@ -60,7 +42,7 @@ _NGRAM_LM_ORACLE = r"""
     """
 
 
-@_staged("ngram_lm_scores", oracle=_NGRAM_LM_ORACLE)
+@query("ngram_lm_scores", oracle=_NGRAM_LM_ORACLE)
 def ngram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-trained bigram add-1 LM score per document (CCNet-style
     quality signal): every add-k probability is a ratio of integer
@@ -74,7 +56,7 @@ def ngram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_lm.score_documents(docs, ngram_lm.ngram_model(docs))
 
 
-@_staged(
+@query(
     "containment_candidate_stats",
     oracle=r"""
     WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
@@ -129,7 +111,7 @@ def containment_candidate_stats_q(
     return dedup.containment_candidate_stats(docs, n=3, t_num=1, t_den=2)
 
 
-@_staged(
+@query(
     "vocab_growth_stats",
     oracle=r"""
     WITH tok AS (SELECT unnest(string_split_regex(trim(text), '\s+')) AS t
@@ -175,7 +157,7 @@ def vocab_growth_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "char_entropy_docs",
     oracle=r"""
     WITH ch AS (SELECT doc_id, unnest(string_split(text, '')) AS c,
@@ -270,7 +252,7 @@ def _leakage_split_oracle() -> str:
     """
 
 
-@_staged("leakage_safe_split", oracle=_leakage_split_oracle())
+@query("leakage_safe_split", oracle=_leakage_split_oracle())
 def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-aware train/val split + leakage audit: assign each
     near-dup COMPONENT (MinHash-LSH pairs closed by min-label
@@ -336,7 +318,7 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "dedup_impact_by_source",
     oracle="""
     WITH f AS (SELECT source, doc_id,
@@ -394,7 +376,7 @@ def dedup_impact_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "dsir_weights_en",
     oracle=r"""
     WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
@@ -487,7 +469,7 @@ _BOTTOMK_ORACLE = r"""
     """
 
 
-@_staged("source_overlap_bottomk", oracle=_BOTTOMK_ORACLE)
+@query("source_overlap_bottomk", oracle=_BOTTOMK_ORACLE)
 def source_overlap_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source duplication matrix via bottom-k (KMV) shingle
     sketches — the audit that decides whether two sources double-count
@@ -517,7 +499,7 @@ def _ann_ivf_inc_oracle() -> str:
     return _ann_ivf_oracle()
 
 
-@_staged("ann_ivf_incremental", oracle=_ann_ivf_inc_oracle())
+@query("ann_ivf_incremental", oracle=_ann_ivf_inc_oracle())
 def ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Probe of an INCREMENTALLY-maintained stored IVF index: base build
     over a corpus prefix, the remainder appended as a committed delta
@@ -593,7 +575,7 @@ def _survivors_oracle() -> str:
     """
 
 
-@_staged("dedup_cluster_survivors", oracle=_survivors_oracle())
+@query("dedup_cluster_survivors", oracle=_survivors_oracle())
 def dedup_cluster_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep/drop verdict per near-dup cluster: MinHash-LSH pairs closed
     into components (the dedup_clusters closure), then ONE survivor per
@@ -649,7 +631,7 @@ _CCNET_ORACLE = f"""
     """
 
 
-@_staged("ccnet_lm_buckets", oracle=_CCNET_ORACLE)
+@query("ccnet_lm_buckets", oracle=_CCNET_ORACLE)
 def ccnet_lm_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet head/middle/tail assignment (Wenzek et al. 2020): each
     LANGUAGE's docs split into LM-score terciles so per-language quality
@@ -667,7 +649,7 @@ def ccnet_lm_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ccnet.lm_quality_buckets(docs, num_partitions=8)
 
 
-@_staged(
+@query(
     "token_fertility_stats",
     oracle=r"""
     WITH t AS (SELECT lang, source,
@@ -806,7 +788,7 @@ def _inc_minhash_oracle(
     """
 
 
-@_staged("incremental_minhash_dedup", oracle=_inc_minhash_oracle())
+@query("incremental_minhash_dedup", oracle=_inc_minhash_oracle())
 def incremental_minhash_dedup_q(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -905,7 +887,7 @@ _GOPHER_ORACLE = r"""
     """
 
 
-@_staged("gopher_rules_report", oracle=_GOPHER_ORACLE)
+@query("gopher_rules_report", oracle=_GOPHER_ORACLE)
 def gopher_rules_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite Gopher-style quality-rule battery (Rae et al. 2021,
     Table A1 style) as a per-(source, rule) fail matrix — the audit a
@@ -997,7 +979,7 @@ def _lsh_band_stats_oracle(num_hashes: int = 16, bands: int = 4) -> str:
     """
 
 
-@_staged("lsh_band_collision_stats", oracle=_lsh_band_stats_oracle())
+@query("lsh_band_collision_stats", oracle=_lsh_band_stats_oracle())
 def lsh_band_collision_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MinHash-LSH family's no-silent-caps measurement surface
     (mirror of containment_candidate_stats for the banding scheme): per
@@ -1087,7 +1069,7 @@ _PACK_FRAG_ORACLE = r"""
     """
 
 
-@_staged("packing_fragmentation_audit", oracle=_PACK_FRAG_ORACLE)
+@query("packing_fragmentation_audit", oracle=_PACK_FRAG_ORACLE)
 def packing_fragmentation_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1175,7 +1157,7 @@ _EMB_HEALTH_ORACLE = r"""
     """
 
 
-@_staged("embedding_health_report", oracle=_EMB_HEALTH_ORACLE)
+@query("embedding_health_report", oracle=_EMB_HEALTH_ORACLE)
 def embedding_health_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding-table QA report — the gate an ANN/semantic
     pipeline runs before index build: dimension consistency (a ragged
@@ -1255,7 +1237,7 @@ def _cluster_histogram_oracle(thr: float = 0.5) -> str:
     """
 
 
-@_staged("dedup_cluster_size_histogram", oracle=_cluster_histogram_oracle())
+@query("dedup_cluster_size_histogram", oracle=_cluster_histogram_oracle())
 def dedup_cluster_size_histogram(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1308,7 +1290,7 @@ _BOUNDARY_ORACLE = r"""
     """
 
 
-@_staged("boundary_overlap_pairs", oracle=_BOUNDARY_ORACLE)
+@query("boundary_overlap_pairs", oracle=_BOUNDARY_ORACLE)
 def boundary_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boundary-duplicate detection: directed pairs where doc A's last 3
     tokens equal doc B's first 3 — the signature of crawl/segmentation
@@ -1415,7 +1397,7 @@ def _minhash_est_err_oracle(num_hashes: int = 16, bands: int = 4) -> str:
     """
 
 
-@_staged("minhash_estimate_error", oracle=_minhash_est_err_oracle())
+@query("minhash_estimate_error", oracle=_minhash_est_err_oracle())
 def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measured estimator error of the 16-hash MinHash scheme: over the
     LSH candidate set, compare the signature-agreement Jaccard estimate
@@ -1528,7 +1510,7 @@ _OOV_ORACLE = r"""
     """
 
 
-@_staged("tokenizer_oov_rate", oracle=_OOV_ORACLE)
+@query("tokenizer_oov_rate", oracle=_OOV_ORACLE)
 def tokenizer_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary-coverage audit: per source, the fraction of token
     occurrences falling outside the corpus's own top-K frequency
@@ -1610,7 +1592,7 @@ def _chain_merge_oracle(thr: float = 0.5) -> str:
     """
 
 
-@_staged("dedup_chain_merge_audit", oracle=_chain_merge_oracle())
+@query("dedup_chain_merge_audit", oracle=_chain_merge_oracle())
 def dedup_chain_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hairball audit of transitive-closure dedup: per non-singleton
     near-dup component, how many member pairs were DIRECTLY verified
@@ -1750,7 +1732,7 @@ def _curate_v2_oracle() -> str:
     """
 
 
-@_staged("curate_corpus_v2", oracle=_curate_v2_oracle())
+@query("curate_corpus_v2", oracle=_curate_v2_oracle())
 def curate_corpus_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship modern-pretraining curation pipeline (r06 verdict
     item 6), composed from the round's new stack with a per-document

@@ -1,16 +1,9 @@
-"""Round-8 query wave — REGISTERED as of round 9 (the freeze lifted).
+"""Round-8 query wave, registered through ``registry.query`` in round 9.
 
-History: these were built and oracle-parity-tested during round 8 while
-the driver window was dedicated to rotation debt (36 r03-latest + 14
-oldest-r04 rows per the round-7 ledger item 10; a new registry entry
-would have displaced a planned rotation slot).  Round 9 promoted them
-per the committed round-8 ledger plan: every ``_staged`` entry now ALSO
-registers through ``registry.query``, so the driver's correctness gate
-covers them directly.  The STAGED_QUERIES/STAGED_ORACLES dicts remain
-as the module's index (the parity tests iterate them) —
-``tests/test_round8_staged.py::test_staged_are_registered`` pins that
-every entry is live in the registry with the identical callable and
-oracle.
+Built and oracle-parity-tested in round 8 while the driver window was
+dedicated to rotation debt (36 r03-latest + 14 oldest-r04 rows per the
+round-7 ledger item 10).  ``tests/test_round8_staged.py`` runs the
+driver-identical Spark-vs-DuckDB parity for every entry.
 """
 
 from __future__ import annotations
@@ -23,19 +16,6 @@ from mapreducemovieanalysis_cloud_spark.functions.rounding import (
 
 from mapreducemovieanalysis_cloud_spark.registry import query
 from mapreducemovieanalysis_cloud_spark.sources.readers import load_table
-
-STAGED_ORACLES: dict[str, str] = {}
-STAGED_QUERIES: dict = {}
-
-
-def _staged(name: str, oracle: str):
-    def deco(fn):
-        STAGED_QUERIES[name] = fn
-        STAGED_ORACLES[name] = oracle
-        return query(name, oracle)(fn)
-
-    return deco
-
 
 def _novelty_oracle() -> str:
     """Shingle CTEs imported from the registered dedup family so the
@@ -60,7 +40,7 @@ def _novelty_oracle() -> str:
     """
 
 
-@_staged("ngram_novelty_curve", oracle=_novelty_oracle())
+@query("ngram_novelty_curve", oracle=_novelty_oracle())
 def ngram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dataset-ordering novelty audit: per document (stream order =
     doc_id), the fraction of its distinct 3-token shingles never seen
@@ -166,7 +146,7 @@ def _sweep_oracle(num_hashes: int = 16, bands: int = 4) -> str:
     """
 
 
-@_staged("jaccard_threshold_sweep", oracle=_sweep_oracle())
+@query("jaccard_threshold_sweep", oracle=_sweep_oracle())
 def jaccard_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Threshold-calibration curve for the MinHash-LSH dedup: exact
     Jaccard of every LSH candidate pair (no threshold filter),
@@ -270,7 +250,7 @@ def _nb_oracle() -> str:
     """
 
 
-@_staged("quality_nb_scores", oracle=_nb_oracle())
+@query("quality_nb_scores", oracle=_nb_oracle())
 def quality_nb_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multinomial Naive Bayes source classifier, trained and scored in
     one distributed pass — the deterministic analog of the
@@ -457,7 +437,7 @@ def _recall_pq_oracle(n_queries: int = 5, topk: int = 10) -> str:
     return _pq_oracle(n_queries=n_queries, topk=topk, tail_sql=tail)
 
 
-@_staged("ann_recall_pq", oracle=_recall_pq_oracle())
+@query("ann_recall_pq", oracle=_recall_pq_oracle())
 def ann_recall_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the PQ compressed index against exact integer-L2
     ground truth, per query — the measured-recall tier for the one ANN
@@ -543,7 +523,7 @@ def _cosine_sweep_oracle() -> str:
     """
 
 
-@_staged("cosine_threshold_sweep", oracle=_cosine_sweep_oracle())
+@query("cosine_threshold_sweep", oracle=_cosine_sweep_oracle())
 def cosine_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Threshold-calibration curve for the EMBEDDING near-dup family
     (the jaccard_threshold_sweep twin): exact cosine of every multi-band
@@ -627,7 +607,7 @@ def _hamming_hist_oracle() -> str:
     """
 
 
-@_staged("simhash_hamming_histogram", oracle=_hamming_hist_oracle())
+@query("simhash_hamming_histogram", oracle=_hamming_hist_oracle())
 def simhash_hamming_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Threshold-calibration curve for the SimHash family — the third
     leg of the calibration triad (jaccard_threshold_sweep for MinHash,
@@ -685,7 +665,7 @@ def _containment_sweep_oracle() -> str:
     """
 
 
-@_staged("containment_threshold_sweep", oracle=_containment_sweep_oracle())
+@query("containment_threshold_sweep", oracle=_containment_sweep_oracle())
 def containment_threshold_sweep(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -752,7 +732,7 @@ def _decon_sweep_oracle() -> str:
     """
 
 
-@_staged("decontamination_overlap_sweep", oracle=_decon_sweep_oracle())
+@query("decontamination_overlap_sweep", oracle=_decon_sweep_oracle())
 def decontamination_overlap_sweep(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

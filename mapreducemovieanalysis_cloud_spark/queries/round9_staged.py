@@ -1,16 +1,11 @@
-"""Round-9 query wave, second wave — REGISTERED as of round 9 (the
-freeze lifted).
+"""Round-9 query wave, second wave, registered through
+``registry.query`` in round 9.
 
-History: built and oracle-parity-tested during round 8 for round 9's
-six slack slots (the round-7 verdict pre-planned round 9 as "remaining
-36 r04 rows + the 8 round8_staged candidates + 6 slack").  Round 9
-promoted them per the committed round-8 ledger plan: every ``_staged``
-entry now ALSO registers through ``registry.query``, so the driver's
-correctness gate covers them directly.  The STAGED_QUERIES/
-STAGED_ORACLES dicts remain as the module's index (the parity tests
-iterate them) — ``tests/test_round9_staged.py::
-test_staged_are_registered`` pins that every entry is live in the
-registry with the identical callable and oracle.
+Built and oracle-parity-tested in round 8 for round 9's six slack
+slots (the round-7 verdict pre-planned round 9 as "remaining 36 r04
+rows + the 8 round8_staged candidates + 6 slack").
+``tests/test_round9_staged.py`` runs the driver-identical
+Spark-vs-DuckDB parity for every entry.
 
 What the wave adds (gaps in the measured-pipeline story, not new
 frameworks):
@@ -39,19 +34,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from mapreducemovieanalysis_cloud_spark.registry import query
 from mapreducemovieanalysis_cloud_spark.sources.readers import load_table
-
-STAGED_ORACLES: dict[str, str] = {}
-STAGED_QUERIES: dict = {}
-
-
-def _staged(name: str, oracle: str):
-    def deco(fn):
-        STAGED_QUERIES[name] = fn
-        STAGED_ORACLES[name] = oracle
-        return query(name, oracle)(fn)
-
-    return deco
-
 
 # ---- LSH recall vs exact ground truth ---------------------------------------
 
@@ -99,7 +81,7 @@ def _recall_oracle(num_hashes: int = 16, bands: int = 4) -> str:
     """
 
 
-@_staged("lsh_recall_vs_exact", oracle=_recall_oracle())
+@query("lsh_recall_vs_exact", oracle=_recall_oracle())
 def lsh_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measured recall of the production MinHash-LSH banding against
     EXACT Jaccard ground truth, per Jaccard decile — the number the
@@ -209,7 +191,7 @@ _DIVERSITY_ORACLE = r"""
     """
 
 
-@_staged("distinct_ngram_diversity", oracle=_DIVERSITY_ORACLE)
+@query("distinct_ngram_diversity", oracle=_DIVERSITY_ORACLE)
 def distinct_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus diversity per source: distinct-n / total-n occurrence
     ratio for n = 1, 2, 3 (the distinct-n metric of text-generation
@@ -293,7 +275,7 @@ def _sq8_err_oracle() -> str:
     """
 
 
-@_staged("sq8_reconstruction_error", oracle=_sq8_err_oracle())
+@query("sq8_reconstruction_error", oracle=_sq8_err_oracle())
 def sq8_reconstruction_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-dimension reconstruction-error audit of the SHIPPED SQ8
     codec (operators/similarity.sq8_reconstructed — the audit decodes
@@ -380,7 +362,7 @@ _HYGIENE_ORACLE = f"""
     """
 
 
-@_staged("unicode_hygiene_report", oracle=_HYGIENE_ORACLE)
+@query("unicode_hygiene_report", oracle=_HYGIENE_ORACLE)
 def unicode_hygiene_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source encoding-hygiene screen: documents containing raw
     control characters, U+FFFD replacement characters (the mojibake
@@ -468,7 +450,7 @@ def _lpa_oracle(iters: int = _LPA_ITERS) -> str:
     """
 
 
-@_staged("label_propagation_communities", oracle=_lpa_oracle())
+@query("label_propagation_communities", oracle=_lpa_oracle())
 def label_propagation_communities(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -567,7 +549,7 @@ _HEAD_MASS_ORACLE = r"""
     """
 
 
-@_staged("token_head_mass", oracle=_HEAD_MASS_ORACLE)
+@query("token_head_mass", oracle=_HEAD_MASS_ORACLE)
 def token_head_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf head concentration per source: the share of all token
     occurrences covered by the top-10/100/1000 tokens — the

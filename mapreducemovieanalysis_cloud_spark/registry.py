@@ -44,9 +44,8 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 # green row, then latest-green round ascending (oldest coverage first),
 # alphabetical tiebreak.  The generated list lives in _priority.py;
 # tests/test_rotation.py pins that the live registry order matches the
-# recomputed policy, so a stale or hand-edited list fails CI.  The registry
-# unfroze in round 7 (the r02/r01 staleness debt cleared through r06):
-# the 23 round-7 entries enter as never-checked and take the head of the
+# recomputed policy, so a stale or hand-edited list fails CI.  A newly
+# registered query enters as never-checked and takes the head of the
 # window; the remaining slots keep paying down the oldest green rows.
 from mapreducemovieanalysis_cloud_spark._priority import PRIORITY as _PRIORITY
 
@@ -112,6 +111,7 @@ def _load_all() -> None:
     import mapreducemovieanalysis_cloud_spark.queries.round11_staged  # noqa: F401
     import mapreducemovieanalysis_cloud_spark.queries.round12_staged  # noqa: F401
     import mapreducemovieanalysis_cloud_spark.queries.round13_staged  # noqa: F401
+    import mapreducemovieanalysis_cloud_spark.queries.round14_staged  # noqa: F401
     import mapreducemovieanalysis_cloud_spark.queries.scale_queries  # noqa: F401
     import mapreducemovieanalysis_cloud_spark.queries.streaming_queries  # noqa: F401
     import mapreducemovieanalysis_cloud_spark.queries.tpch_queries  # noqa: F401

@@ -33,3 +33,21 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def oracle_sf_dir() -> str:
     return SF_ORACLE
+
+
+@pytest.fixture(scope="session")
+def executed_plan(spark, sf_dir):
+    """name -> executed plan of that registry query at ``sf_dir``, built
+    once per session: the registry-wide plan sweep and each wave's
+    hygiene check read the same plan instead of re-building the query."""
+    from mapreducemovieanalysis_cloud_spark import plans, registry
+
+    cache: dict[str, str] = {}
+
+    def plan_of(name: str) -> str:
+        if name not in cache:
+            fn = registry.queries()[name]
+            cache[name] = plans.executed_plan(fn(spark, sf_dir))
+        return cache[name]
+
+    return plan_of

@@ -1,10 +1,7 @@
 """Pins bench.py's store-consumer instrument resolution (r09 verdict
-item 4, hardened per the r10 advisor): the two incremental-store
-consumers must resolve BEFORE their registration (from the staged
-modules, discovered from disk) and AFTER it (from the registry, which
-wins), so the round-over-round reading never silently vanishes across
-the committed promotion windows — and a name resolving NOWHERE is
-reported as a warning, never a crash."""
+item 4): every store consumer resolves from the registry, and a name
+missing from it is reported as a warning, never a crash — so the
+round-over-round reading never silently vanishes."""
 
 from __future__ import annotations
 
@@ -17,35 +14,6 @@ sys.path.insert(
 )
 
 import bench
-
-
-def test_staged_modules_discovered_from_disk():
-    # Discovery must pick up every round*_staged module present in the
-    # queries package — a future round14_staged lands without touching
-    # bench.py (r10 advisor item 1).
-    mods = bench._staged_modules()
-    for expected in (
-        "round11_staged", "round12_staged", "round13_staged",
-        "round14_staged",
-    ):
-        assert expected in mods
-    # ordered by ROUND NUMBER, not lexicographically: staged_queries()
-    # resolves duplicate names first-wave-wins, so round7 must precede
-    # round10 (r11 advisor item 3)
-    import re
-
-    nums = [int(re.search(r"\d+", m).group()) for m in mods]
-    assert nums == sorted(nums)
-    assert mods.index("round7_staged") < mods.index("round10_staged")
-
-
-def test_store_consumers_resolve_from_staged_modules():
-    # With an empty registry dict, both names must fall back to the
-    # staged modules and be callable; nothing unresolved.
-    got, missing = bench._resolve_store_consumers({})
-    assert sorted(got) == sorted(bench.STORE_CONSUMER)
-    assert all(callable(fn) for fn in got.values())
-    assert missing == []
 
 
 def test_registry_resolution_wins_after_promotion():
@@ -88,7 +56,7 @@ def test_speed_canary_records_rate():
     # thread was dead stable while 32-thread stages ran 2x slow) must
     # record a positive aggregate rate on every platform with threads
     assert c["agg_sec"] > 0 and c["agg_mb_per_s"] > 0
-    # the default size must be env-overridable but always positive
+    # the default size is always positive
     assert bench.CANARY_MB > 0
 
 
@@ -408,15 +376,12 @@ def test_epoch_compaction_instrument(spark):
 
 
 def test_missing_name_is_reported_not_fatal():
-    # A renamed/removed staged query must degrade to an absent reading
-    # PLUS a warning entry, never crash the bench (the driver runs it
-    # unattended).
-    orig = bench.STORE_CONSUMER
-    bench.STORE_CONSUMER = orig + ["no_such_query_xyz"]
-    try:
-        got, missing = bench._resolve_store_consumers({})
-        assert "no_such_query_xyz" not in got
-        assert sorted(got) == sorted(orig)
-        assert missing == ["no_such_query_xyz"]
-    finally:
-        bench.STORE_CONSUMER = orig
+    # A STORE_CONSUMER name absent from the registry dict (renamed or
+    # removed) must degrade to an absent reading PLUS a warning entry,
+    # never crash the bench (the driver runs it unattended).
+    absent = bench.STORE_CONSUMER[-1]
+    qs = {name: object() for name in bench.STORE_CONSUMER if name != absent}
+    got, missing = bench._resolve_store_consumers(qs)
+    assert absent not in got
+    assert sorted(got) == sorted(qs)
+    assert missing == [absent]

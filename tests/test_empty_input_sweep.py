@@ -30,15 +30,7 @@ TABLES = (
 # requires input rows; "it crashes" is a bug to fix, not an exclusion.
 EXCLUDED: dict[str, str] = {}
 
-_QUERIES = dict(entry_mod.queries())
-# staged candidates obey the same boundary contract BEFORE promotion,
-# so a wave cannot ship an empty/degenerate-input crash into a future
-# registration round; waves are DISCOVERED from disk (a new
-# round*_staged module is swept with no edit here)
-from mapreducemovieanalysis_cloud_spark.queries import staged_queries
-
-for _k, _v in staged_queries().items():
-    _QUERIES.setdefault(_k, _v)
+_QUERIES = entry_mod.queries()
 
 
 @pytest.fixture(scope="module")

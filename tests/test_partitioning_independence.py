@@ -47,33 +47,19 @@ SENSITIVE = [
     "quality_nb_scores",
     "lsh_recall_vs_exact",
     "sq8_reconstruction_error",
-]
-
-# the round-11 wave's quantized-leaf double-sum candidates entered this
-# pin while still staged (chi-square cell contributions, Adamic-Adar
-# apex weights, the ANF estimate's register sums) and stay listed now
-# that they are registered — the registry resolution below wins
-SENSITIVE_STAGED = [
+    # round-11 promotions: chi-square cell contributions, Adamic-Adar
+    # apex weights, the ANF estimate's register sums (quantized-leaf
+    # double sums)
     "chisq_lang_source",
     "adamic_adar_suppliers",
     "anf_reach_suppliers",
+    # round-14: the Zipf fit's slope/intercept are IEEE ratios of
+    # integer moments whose leaves (quantized ln of rank/count) are
+    # row-local (the wave's other six queries are integer end-to-end)
+    "zipf_slope_tokens",
 ]
 
-# round-14 staged: the one float-bearing candidate — the Zipf fit's
-# slope/intercept are IEEE ratios of integer moments whose leaves
-# (quantized ln of rank/count) are row-local, so the pin must hold
-# BEFORE promotion (the other six are integer end-to-end)
-SENSITIVE_STAGED += ["zipf_slope_tokens"]
-
-_QUERIES = dict(entry_mod.queries())
-from mapreducemovieanalysis_cloud_spark.queries import (  # noqa: E402
-    staged_queries as _staged_queries,
-)
-
-_STAGED = _staged_queries()
-for _k in SENSITIVE_STAGED:
-    _QUERIES.setdefault(_k, _STAGED[_k])
-SENSITIVE = SENSITIVE + SENSITIVE_STAGED
+_QUERIES = entry_mod.queries()
 
 
 def _canon(rows) -> list[tuple]:

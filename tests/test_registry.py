@@ -37,15 +37,24 @@ def test_enumerable_without_spark_session():
     assert out.returncode == 0, out.stderr[-2000:]
 
 
-def test_registry_wide_plan_hygiene(spark, sf_dir):
-    """No query in the registry may plan a CartesianProduct, and
+def test_registry_wide_plan_hygiene(executed_plan):
+    """One pass over every registry query's plan, three checks.
+
+    No query in the registry may plan a CartesianProduct, and
     BroadcastNestedLoopJoin is allowed ONLY where the design calls for a
     broadcast of a one-row aggregate / deliberately tiny side (scalar
     normalizers, thresholds, codebook stats — and the cross-join family
     query itself). A new query that accidentally cross-joins two fact
-    tables fails here before any driver run sees it."""
-    from mapreducemovieanalysis_cloud_spark import plans
+    tables fails here before any driver run sees it.
 
+    Expand replicates every input row once per grouping set / distinct
+    aggregate / unpivot branch — a silent data-amplification operator.
+    It is allowed only where the semantics REQUIRE replication: grouping
+    analytics (rollup/cube/grouping sets), sliding windows (a row belongs
+    to several windows), stack() unpivots, and the exact multi-distinct
+    profile (whose 100 TB tier is the Expand-free HLL variant,
+    profile_columns_approx). A new query that accidentally plans a
+    multi-distinct Expand over a fact table fails here."""
     BNLJ_BY_DESIGN = {
         # cross-join family query: the operator under test IS the cross join
         "join_cross",
@@ -142,31 +151,6 @@ def test_registry_wide_plan_hygiene(spark, sf_dir):
         # anf_reach_suppliers whitelist justification)
         "incremental_distinct_users",
     }
-    offenders_cart, offenders_bnlj = [], []
-    for name, fn in registry.queries().items():
-        plan = plans.executed_plan(fn(spark, sf_dir))
-        if "CartesianProduct" in plan:
-            offenders_cart.append(name)
-        if (
-            "BroadcastNestedLoopJoin" in plan
-            and name not in BNLJ_BY_DESIGN
-        ):
-            offenders_bnlj.append(name)
-    assert not offenders_cart, offenders_cart
-    assert not offenders_bnlj, offenders_bnlj
-
-
-def test_registry_wide_expand_is_intentional(spark, sf_dir):
-    """Expand replicates every input row once per grouping set / distinct
-    aggregate / unpivot branch — a silent data-amplification operator.
-    It is allowed only where the semantics REQUIRE replication: grouping
-    analytics (rollup/cube/grouping sets), sliding windows (a row belongs
-    to several windows), stack() unpivots, and the exact multi-distinct
-    profile (whose 100 TB tier is the Expand-free HLL variant,
-    profile_columns_approx). A new query that accidentally plans a
-    multi-distinct Expand over a fact table fails here."""
-    from mapreducemovieanalysis_cloud_spark import plans
-
     EXPAND_BY_DESIGN = {
         "rollup_orders",
         "cube_qty",
@@ -177,22 +161,30 @@ def test_registry_wide_expand_is_intentional(spark, sf_dir):
         "profile_orders",
         "filtered_aggregates",
     }
-    offenders = []
-    for name, fn in registry.queries().items():
-        plan = plans.executed_plan(fn(spark, sf_dir))
+    offenders_cart, offenders_bnlj, offenders_expand = [], [], []
+    for name in registry.queries():
+        plan = executed_plan(name)
+        if "CartesianProduct" in plan:
+            offenders_cart.append(name)
+        if (
+            "BroadcastNestedLoopJoin" in plan
+            and name not in BNLJ_BY_DESIGN
+        ):
+            offenders_bnlj.append(name)
         if "Expand" in plan and name not in EXPAND_BY_DESIGN:
-            offenders.append(name)
-    assert not offenders, offenders
+            offenders_expand.append(name)
+    assert not offenders_cart, offenders_cart
+    assert not offenders_bnlj, offenders_bnlj
+    assert not offenders_expand, offenders_expand
 
 
 def test_registry_count_pinned():
-    """Exactly 277 registered queries (round-13 promotion: 270 + the 7
-    round13_staged candidates, per the committed round-10/12 ledger
-    plan; the cap is 284 after the round-14 wave).  A smaller count
+    """Exactly 284 registered queries (277 + the 7 round-14 queries,
+    the cap the committed round-10/12 ledger plan names).  A smaller count
     means a query module silently vanished (the failure mode the
     unconditional _load_all imports exist to prevent); a larger one
     means an unplanned registration jumped the rotation queue — both
     need a deliberate update HERE plus a rotation regeneration, never
     an accident."""
-    assert len(registry.queries()) == 277
-    assert len(registry.oracle_sql()) == 277
+    assert len(registry.queries()) == 284
+    assert len(registry.oracle_sql()) == 284

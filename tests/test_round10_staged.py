@@ -1,48 +1,48 @@
 """Parity + contracts for the round-10 query wave
 (queries/round10_staged.py): driver-identical Spark-vs-DuckDB parity,
-the promotion contract (registered with identical callable + oracle),
-plan hygiene, planted-corpus behavioral checks, and independent python
-brute-force replays."""
+the wave's registration pin, plan hygiene, planted-corpus behavioral
+checks, and independent python brute-force replays."""
 
 from __future__ import annotations
 
 import pytest
 
-from mapreducemovieanalysis_cloud_spark.queries.round10_staged import (
-    STAGED_ORACLES,
-    STAGED_QUERIES,
-)
+from mapreducemovieanalysis_cloud_spark import registry
 from tests.oracle import assert_matches_oracle
 
+ROUND10 = (
+    "ab_uplift_ci",
+    "bootstrap_mean_chars_ci",
+    "decontaminate_span_report",
+    "embedding_batch_drift",
+    "incremental_lm_scores",
+    "source_repeat_schedule",
+)
 
-@pytest.mark.parametrize("name", sorted(STAGED_QUERIES))
+
+@pytest.mark.parametrize("name", ROUND10)
 def test_staged_matches_oracle(spark, oracle_sf_dir, name):
     assert_matches_oracle(
-        STAGED_QUERIES[name](spark, oracle_sf_dir),
-        STAGED_ORACLES[name],
+        registry.queries()[name](spark, oracle_sf_dir),
+        registry.oracle_sql()[name],
         oracle_sf_dir,
     )
 
 
 def test_staged_are_registered():
-    """The promotion contract (flipped from the round-10 freeze test
-    per the committed round-9 ledger plan): every entry must be live in
-    the registry with the IDENTICAL callable and oracle — the driver's
-    correctness gate now covers them directly, and a drift between the
-    module index and the registry would mean the parity tests exercise
-    something other than what the driver runs."""
-    from mapreducemovieanalysis_cloud_spark import registry
-
-    live = registry.queries()
-    oracles = registry.oracle_sql()
-    for name in STAGED_QUERIES:
-        assert live[name] is STAGED_QUERIES[name]
-        assert oracles[name] == STAGED_ORACLES[name]
+    """ROUND10 is exactly the set of queries round10_staged registers, each
+    with an oracle: a query added to the module without a parity entry
+    above, or a name above that no longer registers, fails here."""
+    mod = "mapreducemovieanalysis_cloud_spark.queries.round10_staged"
+    live = {
+        name for name, fn in registry.queries().items()
+        if fn.__module__ == mod
+    }
+    assert live == set(ROUND10)
+    assert live <= set(registry.oracle_sql())
 
 
-def test_staged_plan_hygiene(spark, sf_dir):
-    from mapreducemovieanalysis_cloud_spark import plans
-
+def test_staged_plan_hygiene(executed_plan):
     BNLJ_BY_DESIGN = {
         # 1-row corpus-totals broadcast into the per-source plan —
         # the standard bounded-broadcast whitelist justification
@@ -55,8 +55,8 @@ def test_staged_plan_hygiene(spark, sf_dir):
         # 1x1 join by construction
         "ab_uplift_ci",
     }
-    for name, fn in STAGED_QUERIES.items():
-        plan = plans.executed_plan(fn(spark, sf_dir))
+    for name in ROUND10:
+        plan = executed_plan(name)
         assert "CartesianProduct" not in plan, name
         if name not in BNLJ_BY_DESIGN:
             assert "BroadcastNestedLoopJoin" not in plan, name

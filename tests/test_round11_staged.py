@@ -1,10 +1,8 @@
-"""Parity + contracts for the round-11 registry candidates
-(queries/round11_staged.py): the exact Spark-vs-DuckDB comparison the
-driver will run once they promote, the not-registered freeze contract
-(round 9's window was fully committed and round 10's plan is fixed —
-this wave queues for round 11), the staged plan-hygiene sweep,
-behavioral checks on planted corpora, and independent python
-brute-force replays for every shared-double formula."""
+"""Parity + contracts for the round-11 wave (queries/round11_staged.py):
+the exact Spark-vs-DuckDB comparison the driver runs, the wave's
+registration pin, plan hygiene, behavioral checks on planted corpora,
+and independent python brute-force replays for every shared-double
+formula."""
 
 from __future__ import annotations
 
@@ -14,44 +12,48 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from mapreducemovieanalysis_cloud_spark import registry
 from mapreducemovieanalysis_cloud_spark.queries.round11_staged import (
     BENFORD_MICRO,
-    STAGED_ORACLES,
-    STAGED_QUERIES,
 )
 from tests.oracle import assert_matches_oracle
 
+ROUND11 = (
+    "adamic_adar_suppliers",
+    "anf_reach_suppliers",
+    "benford_price_audit",
+    "chisq_lang_source",
+    "cusum_changepoint_events",
+    "incremental_graph_edges",
+    "seasonal_hour_decompose",
+)
 
-@pytest.mark.parametrize("name", sorted(STAGED_QUERIES))
+
+@pytest.mark.parametrize("name", ROUND11)
 def test_staged_matches_oracle(spark, oracle_sf_dir, name):
     assert_matches_oracle(
-        STAGED_QUERIES[name](spark, oracle_sf_dir),
-        STAGED_ORACLES[name],
+        registry.queries()[name](spark, oracle_sf_dir),
+        registry.oracle_sql()[name],
         oracle_sf_dir,
     )
 
 
 def test_staged_are_registered():
-    """The promotion contract (flipped from the round-11 freeze test
-    per the committed round-10 ledger plan): every entry must be live in
-    the registry with the IDENTICAL callable and oracle — the driver's
-    correctness gate now covers them directly, and a drift between the
-    module index and the registry would mean the parity tests exercise
-    something other than what the driver runs."""
-    from mapreducemovieanalysis_cloud_spark import registry
-
-    live = registry.queries()
-    oracles = registry.oracle_sql()
-    for name in STAGED_QUERIES:
-        assert live[name] is STAGED_QUERIES[name]
-        assert oracles[name] == STAGED_ORACLES[name]
+    """ROUND11 is exactly the set of queries round11_staged registers, each
+    with an oracle: a query added to the module without a parity entry
+    above, or a name above that no longer registers, fails here."""
+    mod = "mapreducemovieanalysis_cloud_spark.queries.round11_staged"
+    live = {
+        name for name, fn in registry.queries().items()
+        if fn.__module__ == mod
+    }
+    assert live == set(ROUND11)
+    assert live <= set(registry.oracle_sql())
 
 
-def test_staged_plan_hygiene(spark, sf_dir):
+def test_staged_plan_hygiene(executed_plan):
     """No CartesianProduct ever; BroadcastNestedLoopJoin only for the
     deliberate bounded broadcasts listed here."""
-    from mapreducemovieanalysis_cloud_spark import plans
-
     BNLJ_BY_DESIGN = {
         # catalog-sized marginal grid (|langs| x |sources|) + 1-row
         # total / dims broadcasts
@@ -63,8 +65,8 @@ def test_staged_plan_hygiene(spark, sf_dir):
         "anf_reach_suppliers",
     }
     offenders_cart, offenders_bnlj = [], []
-    for name, fn in STAGED_QUERIES.items():
-        plan = plans.executed_plan(fn(spark, sf_dir))
+    for name in ROUND11:
+        plan = executed_plan(name)
         if "CartesianProduct" in plan:
             offenders_cart.append(name)
         if (

@@ -1,9 +1,8 @@
-"""Parity + contracts for the round-12 registry candidates
-(queries/round12_staged.py): the driver-identical Spark-vs-DuckDB
-parity, the not-registered freeze contract (rounds 10 and 11 are fully
-planned), the staged plan-hygiene sweep, batch-split-invariance and
-retry-idempotence pins for both new sketch stores, and an independent
-python replay of the FM construction."""
+"""Parity + contracts for the round-12 wave (queries/round12_staged.py):
+the driver-identical Spark-vs-DuckDB parity, the wave's registration
+pin, plan hygiene, batch-split-invariance and retry-idempotence pins
+for both new sketch stores, and an independent python replay of the FM
+construction."""
 
 from __future__ import annotations
 
@@ -12,68 +11,66 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
-from mapreducemovieanalysis_cloud_spark.queries.round12_staged import (
-    STAGED_ORACLES,
-    STAGED_QUERIES,
-)
+from mapreducemovieanalysis_cloud_spark import registry
 from tests.oracle import assert_matches_oracle
 
+ROUND12 = (
+    "fm_audience_overlap",
+    "incremental_distinct_users",
+    "incremental_source_overlap",
+    "masked_lm_dataset",
+    "multimodal_frame_dedup",
+    "span_corruption_dataset",
+    "stored_graph_triangles",
+)
 
-@pytest.mark.parametrize("name", sorted(STAGED_QUERIES))
+
+@pytest.mark.parametrize("name", ROUND12)
 def test_staged_matches_oracle(spark, oracle_sf_dir, name):
     assert_matches_oracle(
-        STAGED_QUERIES[name](spark, oracle_sf_dir),
-        STAGED_ORACLES[name],
+        registry.queries()[name](spark, oracle_sf_dir),
+        registry.oracle_sql()[name],
         oracle_sf_dir,
     )
 
 
 def test_staged_are_registered():
-    """The promotion contract (flipped from the round-12 freeze test
-    per the committed round-10/11 ledger plan): every entry must be
-    live in the registry with the IDENTICAL callable and oracle — the
-    driver's correctness gate now covers them directly, and a drift
-    between the module index and the registry would mean the parity
-    tests exercise something other than what the driver runs."""
-    from mapreducemovieanalysis_cloud_spark import registry
-
-    live = registry.queries()
-    oracles = registry.oracle_sql()
-    for name in STAGED_QUERIES:
-        assert live[name] is STAGED_QUERIES[name]
-        assert oracles[name] == STAGED_ORACLES[name]
+    """ROUND12 is exactly the set of queries round12_staged registers, each
+    with an oracle: a query added to the module without a parity entry
+    above, or a name above that no longer registers, fails here."""
+    mod = "mapreducemovieanalysis_cloud_spark.queries.round12_staged"
+    live = {
+        name for name, fn in registry.queries().items()
+        if fn.__module__ == mod
+    }
+    assert live == set(ROUND12)
+    assert live <= set(registry.oracle_sql())
 
 
 def test_staged_oracles_are_the_registered_truths():
     """Two of the three candidates claim "same oracle as the registered
     query, VERBATIM" — pin the strings byte-identical so the claim
     cannot drift."""
-    from mapreducemovieanalysis_cloud_spark import registry
-
     live = registry.oracle_sql()
     assert (
-        STAGED_ORACLES["stored_graph_triangles"]
-        == live["triangle_counts_suppliers"]
+        live["stored_graph_triangles"] == live["triangle_counts_suppliers"]
     )
     assert (
-        STAGED_ORACLES["incremental_source_overlap"]
-        == live["source_overlap_bottomk"]
+        live["incremental_source_overlap"] == live["source_overlap_bottomk"]
     )
 
 
-def test_staged_plan_hygiene(spark, sf_dir):
+def test_staged_plan_hygiene(executed_plan):
     """No CartesianProduct ever; BroadcastNestedLoopJoin only for the
     deliberate bounded broadcasts listed here."""
-    from mapreducemovieanalysis_cloud_spark import plans
-
     BNLJ_BY_DESIGN = {
         # 16-row register table broadcast onto the id stream (the
         # anf_reach_suppliers whitelist justification)
         "incremental_distinct_users",
     }
     offenders_cart, offenders_bnlj = [], []
-    for name, fn in STAGED_QUERIES.items():
-        plan = plans.executed_plan(fn(spark, sf_dir))
+    for name in ROUND12:
+        plan = executed_plan(name)
         if "CartesianProduct" in plan:
             offenders_cart.append(name)
         if (

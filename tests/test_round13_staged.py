@@ -1,52 +1,51 @@
-"""Parity + contracts for the round-13 registry candidates
-(queries/round13_staged.py): the exact Spark-vs-DuckDB comparison the
-driver will run once they promote, the not-registered freeze contract
-(round 10's window registered the round10 wave + rotation debt and
-rounds 11/12 are committed to their own waves), plan hygiene, and
-behavioral pins of each operator's semantics on planted inputs —
-including the merged==rebuild contracts of the two new additive
-stores and the streaming CMS appender."""
+"""Parity + contracts for the round-13 wave (queries/round13_staged.py):
+the exact Spark-vs-DuckDB comparison the driver runs, the wave's
+registration pin, plan hygiene, and behavioral pins of each operator's
+semantics on planted inputs — including the merged==rebuild contracts
+of the two new additive stores and the streaming CMS appender."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from mapreducemovieanalysis_cloud_spark.queries.round13_staged import (
-    STAGED_ORACLES,
-    STAGED_QUERIES,
-)
+from mapreducemovieanalysis_cloud_spark import registry
 from tests.oracle import assert_matches_oracle
 
+ROUND13 = (
+    "hits_trade_authority",
+    "hybrid_search_rrf",
+    "incremental_cms_hitters",
+    "incremental_hist_percentiles",
+    "ktruss_suppliers",
+    "preference_pairs_by_source",
+    "skipgram_pair_topk",
+)
 
-@pytest.mark.parametrize("name", sorted(STAGED_QUERIES))
+
+@pytest.mark.parametrize("name", ROUND13)
 def test_staged_matches_oracle(spark, oracle_sf_dir, name):
     assert_matches_oracle(
-        STAGED_QUERIES[name](spark, oracle_sf_dir),
-        STAGED_ORACLES[name],
+        registry.queries()[name](spark, oracle_sf_dir),
+        registry.oracle_sql()[name],
         oracle_sf_dir,
     )
 
 
 def test_staged_are_registered():
-    """The promotion contract (flipped from the round-13 freeze test
-    per the committed round-10/12 ledger plan): every entry must be
-    live in the registry with the IDENTICAL callable and oracle — the
-    driver's correctness gate now covers them directly, and a drift
-    between the module index and the registry would mean the parity
-    tests exercise something other than what the driver runs."""
-    from mapreducemovieanalysis_cloud_spark import registry
-
-    live = registry.queries()
-    oracles = registry.oracle_sql()
-    for name in STAGED_QUERIES:
-        assert live[name] is STAGED_QUERIES[name]
-        assert oracles[name] == STAGED_ORACLES[name]
+    """ROUND13 is exactly the set of queries round13_staged registers, each
+    with an oracle: a query added to the module without a parity entry
+    above, or a name above that no longer registers, fails here."""
+    mod = "mapreducemovieanalysis_cloud_spark.queries.round13_staged"
+    live = {
+        name for name, fn in registry.queries().items()
+        if fn.__module__ == mod
+    }
+    assert live == set(ROUND13)
+    assert live <= set(registry.oracle_sql())
 
 
-def test_staged_plan_hygiene(spark, sf_dir):
-    from mapreducemovieanalysis_cloud_spark import plans
-
+def test_staged_plan_hygiene(executed_plan):
     BNLJ_BY_DESIGN = {
         # broadcast 1-vector query x corpus scoring (the ann_bruteforce
         # whitelist justification) + the bm25 1-row corpus-stats
@@ -54,8 +53,8 @@ def test_staged_plan_hygiene(spark, sf_dir):
         # fusion are whitelisted kernels
         "hybrid_search_rrf",
     }
-    for name, fn in STAGED_QUERIES.items():
-        plan = plans.executed_plan(fn(spark, sf_dir))
+    for name in ROUND13:
+        plan = executed_plan(name)
         assert "CartesianProduct" not in plan, name
         if name not in BNLJ_BY_DESIGN:
             assert "BroadcastNestedLoopJoin" not in plan, name

@@ -1,10 +1,8 @@
-"""Parity + contracts for the round-14 registry candidates
-(queries/round14_staged.py): the exact Spark-vs-DuckDB comparison the
-driver will run once they promote, the not-registered freeze contract
-(the round-11/12/13 windows are fully committed — this wave queues for
-round 14), the staged plan-hygiene sweep, behavioral checks on planted
-corpora, and independent python brute-force replays for the integer
-recurrences and the shared-double Zipf formula."""
+"""Parity + contracts for the round-14 wave (queries/round14_staged.py):
+the exact Spark-vs-DuckDB comparison the driver runs, the wave's
+registration pin, plan hygiene, behavioral checks on planted corpora,
+and independent python brute-force replays for the integer recurrences
+and the shared-double Zipf formula."""
 
 from __future__ import annotations
 
@@ -15,37 +13,44 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from mapreducemovieanalysis_cloud_spark.queries.round14_staged import (
-    STAGED_ORACLES,
-    STAGED_QUERIES,
-)
+from mapreducemovieanalysis_cloud_spark import registry
 from tests.oracle import assert_matches_oracle
+
+ROUND14 = (
+    "components_stored_edges",
+    "incremental_directed_edges",
+    "pagerank_weighted_stored",
+    "session_funnel_steps",
+    "session_transition_matrix",
+    "stored_hits_authority",
+    "zipf_slope_tokens",
+)
 
 
 def _ts(s):
     return datetime.datetime.fromisoformat(s)
 
 
-@pytest.mark.parametrize("name", sorted(STAGED_QUERIES))
+@pytest.mark.parametrize("name", ROUND14)
 def test_staged_matches_oracle(spark, oracle_sf_dir, name):
     assert_matches_oracle(
-        STAGED_QUERIES[name](spark, oracle_sf_dir),
-        STAGED_ORACLES[name],
+        registry.queries()[name](spark, oracle_sf_dir),
+        registry.oracle_sql()[name],
         oracle_sf_dir,
     )
 
 
-def test_staged_not_registered():
-    """Freeze contract: the round-11/12/13 driver windows are fully
-    committed (each promotes its own staged wave + rotation debt), so
-    this wave must NOT be in the live registry yet — a new entry would
-    displace a planned slot.  The round-14 promotion flips this to
-    assert presence."""
-    from mapreducemovieanalysis_cloud_spark import registry
-
-    live = registry.queries()
-    for name in STAGED_QUERIES:
-        assert name not in live
+def test_staged_are_registered():
+    """ROUND14 is exactly the set of queries round14_staged registers, each
+    with an oracle: a query added to the module without a parity entry
+    above, or a name above that no longer registers, fails here."""
+    mod = "mapreducemovieanalysis_cloud_spark.queries.round14_staged"
+    live = {
+        name for name, fn in registry.queries().items()
+        if fn.__module__ == mod
+    }
+    assert live == set(ROUND14)
+    assert live <= set(registry.oracle_sql())
 
 
 def test_stored_hits_oracle_is_round13_verbatim():
@@ -53,31 +58,19 @@ def test_stored_hits_oracle_is_round13_verbatim():
     precedent): stored_hits_authority must be checked against the
     round-13 HITS truth BYTE-FOR-BYTE — a drifted copy would let the
     store and the inline derivation diverge while both stay green."""
-    from mapreducemovieanalysis_cloud_spark.queries.round13_staged import (
-        STAGED_ORACLES as R13,
-    )
-
-    assert (
-        STAGED_ORACLES["stored_hits_authority"]
-        == R13["hits_trade_authority"]
-    )
+    live = registry.oracle_sql()
+    assert live["stored_hits_authority"] == live["hits_trade_authority"]
 
 
-def test_staged_plan_hygiene(spark, sf_dir):
-    """No CartesianProduct ever; BroadcastNestedLoopJoin only for the
-    deliberate bounded broadcasts listed here."""
-    from mapreducemovieanalysis_cloud_spark import plans
-
-    BNLJ_BY_DESIGN = set()
+def test_staged_plan_hygiene(executed_plan):
+    """No CartesianProduct and no BroadcastNestedLoopJoin: no query in
+    this wave needs a nested-loop join by design."""
     offenders_cart, offenders_bnlj = [], []
-    for name, fn in STAGED_QUERIES.items():
-        plan = plans.executed_plan(fn(spark, sf_dir))
+    for name in ROUND14:
+        plan = executed_plan(name)
         if "CartesianProduct" in plan:
             offenders_cart.append(name)
-        if (
-            "BroadcastNestedLoopJoin" in plan
-            and name not in BNLJ_BY_DESIGN
-        ):
+        if "BroadcastNestedLoopJoin" in plan:
             offenders_bnlj.append(name)
     assert not offenders_cart, offenders_cart
     assert not offenders_bnlj, offenders_bnlj

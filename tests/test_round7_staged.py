@@ -1,42 +1,62 @@
-"""Parity for the round-7 registry candidates (queries/round7_staged.py):
-the exact Spark-vs-DuckDB comparison the driver will run once the
-registry unfreezes and these promote — so promotion is a mechanical
-registration flip, not new verification work."""
+"""Parity for the round-7 wave (queries/round7_staged.py): the exact
+Spark-vs-DuckDB comparison the driver runs, the wave's registration pin,
+plan hygiene, partition-count invariance, and behavioral checks on
+planted corpora."""
 
 from __future__ import annotations
 
 import pytest
 
-from mapreducemovieanalysis_cloud_spark.queries.round7_staged import (
-    STAGED_ORACLES,
-    STAGED_QUERIES,
-)
+from mapreducemovieanalysis_cloud_spark import registry
 from tests.oracle import assert_matches_oracle
 
+ROUND7 = (
+    "ann_ivf_incremental",
+    "boundary_overlap_pairs",
+    "ccnet_lm_buckets",
+    "char_entropy_docs",
+    "containment_candidate_stats",
+    "curate_corpus_v2",
+    "dedup_chain_merge_audit",
+    "dedup_cluster_size_histogram",
+    "dedup_cluster_survivors",
+    "dedup_impact_by_source",
+    "dsir_weights_en",
+    "embedding_health_report",
+    "gopher_rules_report",
+    "incremental_minhash_dedup",
+    "leakage_safe_split",
+    "lsh_band_collision_stats",
+    "minhash_estimate_error",
+    "ngram_lm_scores",
+    "packing_fragmentation_audit",
+    "source_overlap_bottomk",
+    "token_fertility_stats",
+    "tokenizer_oov_rate",
+    "vocab_growth_stats",
+)
 
-@pytest.mark.parametrize("name", sorted(STAGED_QUERIES))
+
+@pytest.mark.parametrize("name", ROUND7)
 def test_staged_matches_oracle(spark, oracle_sf_dir, name):
     assert_matches_oracle(
-        STAGED_QUERIES[name](spark, oracle_sf_dir),
-        STAGED_ORACLES[name],
+        registry.queries()[name](spark, oracle_sf_dir),
+        registry.oracle_sql()[name],
         oracle_sf_dir,
     )
 
 
 def test_staged_are_registered():
-    """The promotion contract (flipped from the round-6 freeze test, per
-    the r06 verdict item 1): every round-7 entry must be live in the
-    registry with the IDENTICAL callable and oracle — the driver's
-    correctness gate now covers them directly, and a drift between the
-    module index and the registry would mean the parity tests exercise
-    something other than what the driver runs."""
-    from mapreducemovieanalysis_cloud_spark import registry
-
-    live = registry.queries()
-    oracles = registry.oracle_sql()
-    for name in STAGED_QUERIES:
-        assert live[name] is STAGED_QUERIES[name]
-        assert oracles[name] == STAGED_ORACLES[name]
+    """ROUND7 is exactly the set of queries round7_staged registers, each
+    with an oracle: a query added to the module without a parity entry
+    above, or a name above that no longer registers, fails here."""
+    mod = "mapreducemovieanalysis_cloud_spark.queries.round7_staged"
+    live = {
+        name for name, fn in registry.queries().items()
+        if fn.__module__ == mod
+    }
+    assert live == set(ROUND7)
+    assert live <= set(registry.oracle_sql())
 
 
 def test_ngram_lm_gates_planted_gibberish(spark):
@@ -191,14 +211,10 @@ def test_ccnet_terciles_partition_per_language(spark):
         )
 
 
-def test_staged_plan_hygiene(spark, sf_dir):
-    """The registry-wide plan sweep (test_registry.py) only sees
-    registered queries; staged candidates get the same gate here so a
-    promotion can never introduce a CartesianProduct, and every
-    BroadcastNestedLoopJoin must be a deliberate 1-row/tiny-side
-    broadcast listed below."""
-    from mapreducemovieanalysis_cloud_spark import plans
-
+def test_staged_plan_hygiene(executed_plan):
+    """No CartesianProduct, and every BroadcastNestedLoopJoin must be a
+    deliberate 1-row/tiny-side broadcast listed below (the plans are the
+    registry-wide sweep's, built once per session)."""
     BNLJ_BY_DESIGN = {
         # 1-row vocabulary-size scalar broadcast into the add-1 term
         "ngram_lm_scores",
@@ -212,8 +228,8 @@ def test_staged_plan_hygiene(spark, sf_dir):
         "ann_ivf_incremental",
     }
     offenders_cart, offenders_bnlj = [], []
-    for name, fn in STAGED_QUERIES.items():
-        plan = plans.executed_plan(fn(spark, sf_dir))
+    for name in ROUND7:
+        plan = executed_plan(name)
         if "CartesianProduct" in plan:
             offenders_cart.append(name)
         if (
@@ -227,7 +243,7 @@ def test_staged_plan_hygiene(spark, sf_dir):
 
 def test_staged_partition_count_invariance(spark, sf_dir):
     """The registry invariance pin (tests/test_properties.py) extended
-    to the staged candidates whose kernels involve prefix sums, global
+    to the round-7 queries whose kernels involve prefix sums, global
     distributions, or iterative fixpoints — the classes whose naive
     formulations are partition-sensitive."""
     from tests.oracle import _canon
@@ -247,7 +263,7 @@ def test_staged_partition_count_invariance(spark, sf_dir):
         for parts in ("1", default):
             spark.conf.set("spark.sql.shuffle.partitions", parts)
             for name in NAMES:
-                pdf = STAGED_QUERIES[name](spark, sf_dir).toPandas()
+                pdf = registry.queries()[name](spark, sf_dir).toPandas()
                 results.setdefault(name, []).append(_canon(pdf))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", default)

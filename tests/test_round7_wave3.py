@@ -1,4 +1,4 @@
-"""Behavioral tests for the wave-3 staged candidates (queries/
+"""Behavioral tests for the round-7 wave-3 queries (queries/
 round7_staged.py): each one checked against a hand-computable or
 brute-force result, independent of the DuckDB oracle parity that
 tests/test_round7_staged.py already runs — the oracle proves the two

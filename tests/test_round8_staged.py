@@ -1,8 +1,6 @@
-"""Parity + contracts for the round-8 registry candidates
-(queries/round8_staged.py): the exact Spark-vs-DuckDB comparison the
-driver will run once they promote, the not-registered freeze contract
-(round 8's driver window is reserved for rotation debt per the round-7
-ledger), the staged plan-hygiene sweep, and behavioral checks of each
+"""Parity + contracts for the round-8 wave (queries/round8_staged.py):
+the exact Spark-vs-DuckDB comparison the driver runs, the wave's
+registration pin, plan hygiene, and behavioral checks of each
 measurement's semantics on planted corpora."""
 
 from __future__ import annotations
@@ -10,44 +8,47 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from mapreducemovieanalysis_cloud_spark.queries.round8_staged import (
-    STAGED_ORACLES,
-    STAGED_QUERIES,
-)
+from mapreducemovieanalysis_cloud_spark import registry
 from tests.oracle import assert_matches_oracle
 
+ROUND8 = (
+    "ann_recall_pq",
+    "containment_threshold_sweep",
+    "cosine_threshold_sweep",
+    "decontamination_overlap_sweep",
+    "jaccard_threshold_sweep",
+    "ngram_novelty_curve",
+    "quality_nb_scores",
+    "simhash_hamming_histogram",
+)
 
-@pytest.mark.parametrize("name", sorted(STAGED_QUERIES))
+
+@pytest.mark.parametrize("name", ROUND8)
 def test_staged_matches_oracle(spark, oracle_sf_dir, name):
     assert_matches_oracle(
-        STAGED_QUERIES[name](spark, oracle_sf_dir),
-        STAGED_ORACLES[name],
+        registry.queries()[name](spark, oracle_sf_dir),
+        registry.oracle_sql()[name],
         oracle_sf_dir,
     )
 
 
 def test_staged_are_registered():
-    """The promotion contract (flipped from the round-8 freeze test per
-    the committed round-8 ledger plan): every round-8 entry must be
-    live in the registry with the IDENTICAL callable and oracle — the
-    driver's correctness gate now covers them directly, and a drift
-    between the module index and the registry would mean the parity
-    tests exercise something other than what the driver runs."""
-    from mapreducemovieanalysis_cloud_spark import registry
-
-    live = registry.queries()
-    oracles = registry.oracle_sql()
-    for name in STAGED_QUERIES:
-        assert live[name] is STAGED_QUERIES[name]
-        assert oracles[name] == STAGED_ORACLES[name]
+    """ROUND8 is exactly the set of queries round8_staged registers, each
+    with an oracle: a query added to the module without a parity entry
+    above, or a name above that no longer registers, fails here."""
+    mod = "mapreducemovieanalysis_cloud_spark.queries.round8_staged"
+    live = {
+        name for name, fn in registry.queries().items()
+        if fn.__module__ == mod
+    }
+    assert live == set(ROUND8)
+    assert live <= set(registry.oracle_sql())
 
 
-def test_staged_plan_hygiene(spark, sf_dir):
+def test_staged_plan_hygiene(executed_plan):
     """Same gate as the registry-wide sweep: no CartesianProduct ever;
     BroadcastNestedLoopJoin only for deliberate 1-row/bounded
     broadcasts listed here."""
-    from mapreducemovieanalysis_cloud_spark import plans
-
     BNLJ_BY_DESIGN = {
         # 1-row vocab-size scalar + n_sources-row base-term broadcasts
         # into the smoothing terms (the ngram_lm_scores justification)
@@ -57,8 +58,8 @@ def test_staged_plan_hygiene(spark, sf_dir):
         "ann_recall_pq",
     }
     offenders_cart, offenders_bnlj = [], []
-    for name, fn in STAGED_QUERIES.items():
-        plan = plans.executed_plan(fn(spark, sf_dir))
+    for name in ROUND8:
+        plan = executed_plan(name)
         if "CartesianProduct" in plan:
             offenders_cart.append(name)
         if (

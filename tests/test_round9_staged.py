@@ -1,8 +1,6 @@
-"""Parity + contracts for the round-9 second-wave registry candidates
+"""Parity + contracts for the round-9 second wave
 (queries/round9_staged.py): the exact Spark-vs-DuckDB comparison the
-driver will run once they promote, the not-registered freeze contract
-(these are sized for round 9's slack slots, after the rotation debt
-and the round8_staged wave), the plan-hygiene sweep, and behavioral
+driver runs, the wave's registration pin, plan hygiene, and behavioral
 checks of each measurement's semantics on planted corpora."""
 
 from __future__ import annotations
@@ -10,43 +8,44 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from mapreducemovieanalysis_cloud_spark.queries.round9_staged import (
-    STAGED_ORACLES,
-    STAGED_QUERIES,
-)
+from mapreducemovieanalysis_cloud_spark import registry
 from tests.oracle import assert_matches_oracle
 
+ROUND9 = (
+    "distinct_ngram_diversity",
+    "label_propagation_communities",
+    "lsh_recall_vs_exact",
+    "sq8_reconstruction_error",
+    "token_head_mass",
+    "unicode_hygiene_report",
+)
 
-@pytest.mark.parametrize("name", sorted(STAGED_QUERIES))
+
+@pytest.mark.parametrize("name", ROUND9)
 def test_staged_matches_oracle(spark, oracle_sf_dir, name):
     assert_matches_oracle(
-        STAGED_QUERIES[name](spark, oracle_sf_dir),
-        STAGED_ORACLES[name],
+        registry.queries()[name](spark, oracle_sf_dir),
+        registry.oracle_sql()[name],
         oracle_sf_dir,
     )
 
 
 def test_staged_are_registered():
-    """The promotion contract (flipped from the round-9 freeze test per
-    the committed round-8 ledger plan): every second-wave entry must be
-    live in the registry with the IDENTICAL callable and oracle — the
-    driver's correctness gate now covers them directly, and a drift
-    between the module index and the registry would mean the parity
-    tests exercise something other than what the driver runs."""
-    from mapreducemovieanalysis_cloud_spark import registry
-
-    live = registry.queries()
-    oracles = registry.oracle_sql()
-    for name in STAGED_QUERIES:
-        assert live[name] is STAGED_QUERIES[name]
-        assert oracles[name] == STAGED_ORACLES[name]
+    """ROUND9 is exactly the set of queries round9_staged registers, each
+    with an oracle: a query added to the module without a parity entry
+    above, or a name above that no longer registers, fails here."""
+    mod = "mapreducemovieanalysis_cloud_spark.queries.round9_staged"
+    live = {
+        name for name, fn in registry.queries().items()
+        if fn.__module__ == mod
+    }
+    assert live == set(ROUND9)
+    assert live <= set(registry.oracle_sql())
 
 
-def test_staged_plan_hygiene(spark, sf_dir):
+def test_staged_plan_hygiene(executed_plan):
     """No CartesianProduct ever; BroadcastNestedLoopJoin only for the
     deliberate bounded broadcasts listed here."""
-    from mapreducemovieanalysis_cloud_spark import plans
-
     BNLJ_BY_DESIGN = {
         # the d-row per-dim min/max stats broadcast into the encoder —
         # the ann_sq8 whitelist justification, via the same
@@ -54,8 +53,8 @@ def test_staged_plan_hygiene(spark, sf_dir):
         "sq8_reconstruction_error",
     }
     offenders_cart, offenders_bnlj = [], []
-    for name, fn in STAGED_QUERIES.items():
-        plan = plans.executed_plan(fn(spark, sf_dir))
+    for name in ROUND9:
+        plan = executed_plan(name)
         if "CartesianProduct" in plan:
             offenders_cart.append(name)
         if (

@@ -1,7 +1,7 @@
 """Property-based tests (hypothesis) for the mergeable-sketch store
 algebra — the claims the round-11/12/13 incremental-store tier rests
 on, here exercised over RANDOM data and RANDOM batch splits rather
-than the staged modules' fixed two-way parity splits:
+than the wave test files' fixed two-way parity splits:
 
 * FM register masks: OR-merge of per-batch masks == full-corpus masks,
   and duplicated rows change nothing (idempotence) — the "row-level

@@ -50,11 +50,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as e
-    from mapreducemovieanalysis_cloud_spark.queries import staged_queries
-
-    qs = dict(e.queries())
-    for k, v in staged_queries().items():
-        qs.setdefault(k, v)
+    qs = e.queries()
 
     def run(df) -> float:
         t = time.monotonic()

@@ -70,24 +70,7 @@ def main() -> None:
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    qs, oracles = dict(e.queries()), dict(e.oracle_sql())
-    # Explicitly-named staged candidates resolve too (never part of a
-    # first_n/full sweep — those stay registry-only, like the driver),
-    # so a promotion round can preflight its wave in this exact flow.
-    if only:
-        import importlib
-
-        from mapreducemovieanalysis_cloud_spark.queries import (
-            staged_modules,
-        )
-
-        for mod in staged_modules():
-            m = importlib.import_module(
-                f"mapreducemovieanalysis_cloud_spark.queries.{mod}"
-            )
-            for k in m.STAGED_QUERIES:
-                qs.setdefault(k, m.STAGED_QUERIES[k])
-                oracles.setdefault(k, m.STAGED_ORACLES[k])
+    qs, oracles = e.queries(), e.oracle_sql()
     names = only or (list(qs)[:first_n] if first_n else list(qs))
     failed = []
     for i, name in enumerate(names):

@@ -2,7 +2,7 @@
 
     python tools/opt_probe.py [--reps N] [--sf DIR] [--plans TAG] q1 q2 ...
 
-For each named query (registered or staged): one warm run, then median of
+For each named registered query: one warm run, then median of
 ``--reps`` (default 5) noop-sink runs — the bench's exact methodology
 (guide §1.4) in an isolated process so one query's JIT/GC does not bleed
 into another's reading.  With ``--plans TAG`` the pre-execution
@@ -53,11 +53,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as e
-    from mapreducemovieanalysis_cloud_spark.queries import staged_queries
-
-    qs = dict(e.queries())
-    for k, v in staged_queries().items():
-        qs.setdefault(k, v)
+    qs = e.queries()
 
     plans_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

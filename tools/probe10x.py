@@ -48,13 +48,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     port = int(spark.sparkContext.uiWebUrl.rsplit(":", 1)[1])
-    qs = dict(e.queries())
-    # Staged candidates are probe-able before they register — waves
-    # discovered from disk (queries.staged_queries), registration wins.
-    from mapreducemovieanalysis_cloud_spark.queries import staged_queries
-
-    for k, v in staged_queries().items():
-        qs.setdefault(k, v)
+    qs = e.queries()
     for name in names:
         for sf in SFS:
             fn = qs[name]
