@@ -38,23 +38,14 @@ def test_enumerable_without_spark_session():
 
 
 def test_registry_wide_plan_hygiene(executed_plan):
-    """One pass over every registry query's plan, three checks.
-
-    No query in the registry may plan a CartesianProduct, and
+    """No query in the registry may plan a CartesianProduct, and
     BroadcastNestedLoopJoin is allowed ONLY where the design calls for a
     broadcast of a one-row aggregate / deliberately tiny side (scalar
     normalizers, thresholds, codebook stats — and the cross-join family
     query itself). A new query that accidentally cross-joins two fact
-    tables fails here before any driver run sees it.
-
-    Expand replicates every input row once per grouping set / distinct
-    aggregate / unpivot branch — a silent data-amplification operator.
-    It is allowed only where the semantics REQUIRE replication: grouping
-    analytics (rollup/cube/grouping sets), sliding windows (a row belongs
-    to several windows), stack() unpivots, and the exact multi-distinct
-    profile (whose 100 TB tier is the Expand-free HLL variant,
-    profile_columns_approx). A new query that accidentally plans a
-    multi-distinct Expand over a fact table fails here."""
+    tables fails here before any driver run sees it.  Plans come from
+    the session-wide ``executed_plan`` cache, so each query is built
+    once for this check and the Expand check below."""
     BNLJ_BY_DESIGN = {
         # cross-join family query: the operator under test IS the cross join
         "join_cross",
@@ -151,6 +142,29 @@ def test_registry_wide_plan_hygiene(executed_plan):
         # anf_reach_suppliers whitelist justification)
         "incremental_distinct_users",
     }
+    offenders_cart, offenders_bnlj = [], []
+    for name in registry.queries():
+        plan = executed_plan(name)
+        if "CartesianProduct" in plan:
+            offenders_cart.append(name)
+        if (
+            "BroadcastNestedLoopJoin" in plan
+            and name not in BNLJ_BY_DESIGN
+        ):
+            offenders_bnlj.append(name)
+    assert not offenders_cart, offenders_cart
+    assert not offenders_bnlj, offenders_bnlj
+
+
+def test_registry_wide_expand_is_intentional(executed_plan):
+    """Expand replicates every input row once per grouping set / distinct
+    aggregate / unpivot branch — a silent data-amplification operator.
+    It is allowed only where the semantics REQUIRE replication: grouping
+    analytics (rollup/cube/grouping sets), sliding windows (a row belongs
+    to several windows), stack() unpivots, and the exact multi-distinct
+    profile (whose 100 TB tier is the Expand-free HLL variant,
+    profile_columns_approx). A new query that accidentally plans a
+    multi-distinct Expand over a fact table fails here."""
     EXPAND_BY_DESIGN = {
         "rollup_orders",
         "cube_qty",
@@ -161,21 +175,11 @@ def test_registry_wide_plan_hygiene(executed_plan):
         "profile_orders",
         "filtered_aggregates",
     }
-    offenders_cart, offenders_bnlj, offenders_expand = [], [], []
+    offenders = []
     for name in registry.queries():
-        plan = executed_plan(name)
-        if "CartesianProduct" in plan:
-            offenders_cart.append(name)
-        if (
-            "BroadcastNestedLoopJoin" in plan
-            and name not in BNLJ_BY_DESIGN
-        ):
-            offenders_bnlj.append(name)
-        if "Expand" in plan and name not in EXPAND_BY_DESIGN:
-            offenders_expand.append(name)
-    assert not offenders_cart, offenders_cart
-    assert not offenders_bnlj, offenders_bnlj
-    assert not offenders_expand, offenders_expand
+        if "Expand" in executed_plan(name) and name not in EXPAND_BY_DESIGN:
+            offenders.append(name)
+    assert not offenders, offenders
 
 
 def test_registry_count_pinned():
