@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
@@ -20,11 +21,12 @@ def test_enumerable_without_spark_session():
     """The driver may call __spark_entry__.queries() before it builds a
     SparkSession — enumeration must not require an active context (no
     module-level pandas_udf / udtf registration)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     code = (
-        "import sys; sys.path.insert(0, '/root/repo');"
+        f"import sys; sys.path.insert(0, {root!r});"
         "import __spark_entry__ as e;"
         "qs = e.queries(); o = e.oracle_sql();"
-        "assert len(qs) >= 57 and set(o) <= set(qs);"
+        f"assert len(qs) == {len(registry.queries())} and set(o) <= set(qs);"
         "print(len(qs))"
     )
     out = subprocess.run(
@@ -32,7 +34,7 @@ def test_enumerable_without_spark_session():
         capture_output=True,
         text=True,
         timeout=120,
-        cwd="/root/repo",
+        cwd=root,
     )
     assert out.returncode == 0, out.stderr[-2000:]
 

@@ -3,9 +3,8 @@
     python tools/ab_probe.py --env SPARK_GRAFT_FANOUT --a 1 --b 0 \
         [--reps N] [--sf DIR] q1 q2 ...
 
-Host-speed drift (the round-13 machine-speed watch) makes adjacent
-whole-process probes incomparable: the canary can halve between two runs
-minutes apart.  This probe builds BOTH plan variants in the same session
+Host-speed drift makes adjacent whole-process probes incomparable: the
+host's parallel throughput can halve between two runs minutes apart.  This probe builds BOTH plan variants in the same session
 (the env var is read at plan-construction time) and alternates single
 noop-sink executions A,B,A,B,... so every pair of samples shares the same
 host conditions within seconds.  Reports per-variant medians and the
@@ -18,9 +17,10 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import _run as run  # noqa: E402
 
 
 def main() -> None:
@@ -51,11 +51,6 @@ def main() -> None:
 
     import __spark_entry__ as e
     qs = e.queries()
-
-    def run(df) -> float:
-        t = time.monotonic()
-        df.write.format("noop").mode("overwrite").save()
-        return time.monotonic() - t
 
     for name in names:
         fn = qs[name]

@@ -10,22 +10,19 @@ into another's reading.  With ``--plans TAG`` the pre-execution
 (the optimization round's before/after evidence files).
 
 Prints one JSON line per query: {"name", "median", "iqr", "samples"} and
-a final line with the machine-speed canary so a sick-host reading is
-visible next to the numbers it contaminates (SCALE.md round-13
-machine-speed watch).
+a final line naming the scale-factor directory.  Timing and the
+median/IQR come from ``bench`` so probe and bench readings compare.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _speed_canary  # noqa: E402
+from bench import _median_iqr, _run  # noqa: E402
 
 
 def main() -> None:
@@ -44,8 +41,6 @@ def main() -> None:
             plans_tag = args[i + 1]; i += 2
         else:
             names.append(args[i]); i += 1
-
-    canary_before = _speed_canary()
 
     from mapreducemovieanalysis_cloud_spark.session import get_session
 
@@ -71,29 +66,15 @@ def main() -> None:
                     df._jdf.queryExecution(), "formatted"))
         spark.sparkContext.setJobDescription(f"opt-probe: {name}")
         df.write.format("noop").mode("overwrite").save()  # warm
-        samples = []
-        for _ in range(reps):
-            t = time.monotonic()
-            df.write.format("noop").mode("overwrite").save()
-            samples.append(time.monotonic() - t)
-        samples.sort()
-        med = statistics.median(samples)
-        iqr = 0.0
-        if reps >= 3:
-            q1, _, q3 = statistics.quantiles(samples, n=4)
-            iqr = q3 - q1
+        samples = sorted(_run(df) for _ in range(reps))
+        med, iqr = _median_iqr(samples)
         print(json.dumps({
             "name": name,
             "median": round(med, 4),
             "iqr": round(iqr, 4),
             "samples": [round(s, 4) for s in samples],
         }), flush=True)
-    canary_after = _speed_canary()
-    print(json.dumps({
-        "canary_agg_before": canary_before.get("agg_mb_per_s"),
-        "canary_agg_after": canary_after.get("agg_mb_per_s"),
-        "sf_dir": sf_dir,
-    }), flush=True)
+    print(json.dumps({"sf_dir": sf_dir}), flush=True)
     spark.stop()
 
 
