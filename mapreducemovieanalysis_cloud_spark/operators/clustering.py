@@ -1,4 +1,5 @@
-"""Iterative clustering over embeddings (k-means, fixed Lloyd iterations).
+"""Iterative clustering over embeddings (k-means, fixed Lloyd iterations),
+and the engine's one nearest-centroid kernel.
 
 Lloyd's iterations run the way Spark MLlib's KMeans runs them: the k×d
 int64 codebook lives on the driver, and each iteration is one narrow
@@ -8,25 +9,42 @@ keyed on cell, map-side partial sums). The driver collects only the k
 codebook rows per iteration — the rows a broadcast of the centroids
 would collect there anyway — never point data.
 
-Scale posture: the codebook is k×d longs on the driver and in every task.
-k is a constant, or derived from ``target_cluster_size`` so it grows with
-n (k = n/t codebook rows, the same growth a broadcast codebook had); the
+The kernel (``_codebook`` + ``_assign``) has three users, with no branch
+on which one calls it:
+
+- k-means (``kmeans_assignments``, and through it ``semantic_dedup``):
+  one cell per point;
+- product quantization (operators/pq.py): the codebook is keyed by
+  subspace ``j`` and each (vector, subspace) row picks its code among
+  that subspace's centroids, for training and for encoding;
+- IVF (operators/similarity.py and ``pq.ann_ivf_pq_topk``): centroid
+  norms are 0, so the arg-min score is the arg-max dot product; the
+  corpus keeps one cell, each query its ``nprobe`` best.
+
+Scale posture: the codebook is held on the driver and in every task —
+k×d longs for k-means, n_centroids×d for IVF, m·k·subdim for PQ. k is a
+constant, or derived from ``target_cluster_size`` so it grows with n
+(k = n/t codebook rows, the same growth a broadcast codebook had); the
 ``train_sample`` tier bounds the intermediate Lloyd rounds by the sample,
 and only the final assign is corpus-linear.
 
 Determinism contract (what makes this oracle-checkable, unlike textbook
-k-means): points are quantized ints, distances are exact int64
-``|p|² − 2·p·c + |c|²`` (argmin with cell-id tie-break — no float compare),
-and updated centroids round the per-dim mean back to int64 (exact bigint
-sum, one IEEE division, round-half-away — identical in any engine). Seeds
-are the first k vectors by id.
+k-means): points are quantized ints, scores are exact int64
+``|c|² − 2·p·c`` (the ``|p|²`` term of the squared distance is constant
+per point and cannot move the arg-min; cell-id tie-break — no float
+compare), and updated centroids round the per-dim mean back to int64
+(exact bigint sum, one IEEE division, round-half-away — identical in any
+engine). Seeds are the first k vectors by id.
 """
 
 from __future__ import annotations
 
+from itertools import groupby
+
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from mapreducemovieanalysis_cloud_spark.functions.hashing import md5_bucket
@@ -37,32 +55,48 @@ from mapreducemovieanalysis_cloud_spark.functions.vector import (
 )
 
 
-def _codebook(cents: DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """The k centroid rows ``(cell, cv, cn2)`` collected to the driver and
-    sorted by cell: (cells, (k, d) int64 matrix, norms)."""
+def _codebook(cents: DataFrame) -> dict[int, tuple]:
+    """The centroid rows ``([j,] cell, cv, cn2)`` collected to the driver,
+    keyed by subspace ``j`` (all 0 when ``cents`` has no ``j``): per
+    subspace (cells, (k, d) int64 matrix, norms), sorted by cell."""
+    j = F.col("j") if "j" in cents.columns else F.lit(0)
     rows = sorted(
-        cents.select("cell", "cv", "cn2").collect(), key=lambda r: r.cell
+        cents.select(j.alias("j"), "cell", "cv", "cn2").collect(),
+        key=lambda r: (r.j, r.cell),
     )
     widths = {-1 if r.cv is None else len(r.cv) for r in rows}
     if -1 in widths or len(widths) > 1:
         raise ValueError("clustering._codebook: NULL or ragged centroid")
     d = widths.pop() if widths else 0
-    cv = np.array([r.cv for r in rows], dtype=np.int64).reshape(len(rows), d)
-    return (
-        np.array([r.cell for r in rows], dtype=np.int64),
-        cv,
-        np.array([r.cn2 for r in rows], dtype=np.int64),
-    )
+    book = {}
+    for sub, grp in groupby(rows, key=lambda r: r.j):
+        grp = list(grp)
+        book[sub] = (
+            np.array([r.cell for r in grp], dtype=np.int64),
+            np.array([r.cv for r in grp], dtype=np.int64).reshape(len(grp), d),
+            np.array([r.cn2 for r in grp], dtype=np.int64),
+        )
+    return book
 
 
-def _assign(pts: DataFrame, codebook, keep_vec: bool = True) -> DataFrame:
-    """Nearest codebook cell per point in one ``mapInArrow`` pass: for each
-    Arrow batch, ``d2 = pn2 − 2·X·Cᵀ + cn2`` in exact int64, then
-    ``argmin`` over the cell-sorted codebook, whose first minimum is the
-    smallest cell — the same choice as a ``(d2, cell)`` lexicographic
-    arg-min. ``pts``: (vec_id, qv, pn2); returns them plus ``cell``
-    (``keep_vec=False``: only vec_id, cell). A narrow map: no join, no
-    exchange, no aggregate.
+def _assign(
+    pts: DataFrame,
+    codebook: dict,
+    vec: str = "qv",
+    keep: int = 1,
+    out: list[str] | None = None,
+) -> DataFrame:
+    """The ``keep`` nearest codebook cells per point in one ``mapInArrow``
+    pass: ``out`` columns of ``pts`` (default all) plus ``cell``, one row
+    per kept cell. For each Arrow batch the score ``cn2 − 2·X·Cᵀ`` is
+    exact int64 (the point's own norm is constant per row, so it cannot
+    move the arg-min), and the cells are taken in ``(score, cell)`` order
+    over the cell-sorted codebook: ``argmin`` for one, a stable
+    ``argsort`` for more. When ``pts`` has a ``j`` column, each row is
+    scored against subspace ``j`` of the codebook (PQ), otherwise against
+    subspace 0; a row whose subspace has no centroids is dropped. A
+    codebook with ``cn2 = 0`` turns the arg-min into the arg-max dot
+    product (IVF). A narrow map: no join, no exchange, no aggregate.
 
     Fails loudly instead of returning wrong cells: a NULL or ragged
     vector, or one whose width differs from the codebook's, raises a
@@ -70,37 +104,56 @@ def _assign(pts: DataFrame, codebook, keep_vec: bool = True) -> DataFrame:
     2^63`` — the bound on every term and partial sum — does not hold
     (numpy int64 matmul wraps silently). An empty codebook assigns
     nothing."""
-    cells, cv, cn2 = codebook
-    k, d = cv.shape
-    mc = max(int(cv.max(initial=0)), -int(cv.min(initial=0)))
-    id_t = pts.schema["vec_id"].dataType.simpleString()
-    out = ["vec_id", "qv", "pn2"] if keep_vec else ["vec_id"]
+    books = list(codebook.items())
+    keep = min([keep] + [len(cells) for _, (cells, _, _) in books])
+    d = books[0][1][1].shape[1] if books else 0
+    mc = max(
+        (max(int(cv.max(initial=0)), -int(cv.min(initial=0)))
+         for _, (_, cv, _) in books),
+        default=0,
+    )
+    by_j = "j" in pts.columns
+    out = list(pts.columns) if out is None else out
 
     def assign(batches):
         import pyarrow as pa
 
         for rb in batches:
-            if not k or not rb.num_rows:
+            n = rb.num_rows
+            if not books or not n:
                 continue
-            x = list_matrix(rb.column("qv"), d, "clustering._assign")
+            x = list_matrix(rb.column(vec), d, "clustering._assign")
             mx = max(int(x.max(initial=0)), -int(x.min(initial=0)))
             if d * (mx + mc) ** 2 >= 1 << 63:
                 raise ValueError(
                     "clustering._assign: int64 overflow bound violated "
                     f"(d={d}, max|x|={mx}, max|c|={mc})"
                 )
-            pn2 = rb.column("pn2").to_numpy()
-            d2 = pn2[:, None] - 2 * (x @ cv.T) + cn2[None, :]
-            cell = pa.array(cells[np.argmin(d2, axis=1)]).cast(
-                rb.schema.field("vec_id").type
-            )
+            js = rb.column("j").to_numpy() if by_j else None
+            won = np.empty((n, keep), dtype=np.int64)
+            hit = np.zeros(n, dtype=bool)
+            for sub, (cells, cv, cn2) in books:
+                rows = slice(None) if js is None else js == sub
+                score = cn2[None, :] - 2 * (x[rows] @ cv.T)
+                top = (
+                    score.argmin(axis=1)[:, None]
+                    if keep == 1
+                    else np.argsort(score, axis=1, kind="stable")[:, :keep]
+                )
+                won[rows] = cells[top]
+                hit[rows] = True
+            cols = [rb.column(c) for c in out]
+            if keep > 1 or not hit.all():
+                ix = pa.array(np.repeat(np.flatnonzero(hit), keep))
+                cols = [c.take(ix) for c in cols]
             yield pa.RecordBatch.from_arrays(
-                [rb.column(c) for c in out] + [cell], names=out + ["cell"]
+                cols + [pa.array(won[hit].ravel())], names=out + ["cell"]
             )
 
-    schema = f"vec_id {id_t}, qv array<long>, pn2 long, cell {id_t}"
-    if not keep_vec:
-        schema = f"vec_id {id_t}, cell {id_t}"
+    schema = T.StructType(
+        [T.StructField(c, pts.schema[c].dataType) for c in out]
+        + [T.StructField("cell", T.LongType())]
+    )
     return pts.mapInArrow(assign, schema)
 
 
@@ -227,7 +280,7 @@ def kmeans_assignments(
         train = pts
     for _ in range(iters - 1):
         codebook = _codebook(_update(_assign(train, codebook), dim))
-    assigned = _assign(pts, codebook, keep_vec)
+    assigned = _assign(pts, codebook, out=None if keep_vec else ["vec_id"])
     return assigned.withColumnRenamed("cell", "cluster")
 
 

@@ -10,17 +10,23 @@ the corpus shrinks from d·4 bytes to m bytes per vector (64-dim float →
 memory; the scan side becomes an integer-sum over a broadcast distance
 table.
 
-Built entirely from the engine's deterministic k-means kernel
-(operators/clustering.py): quantized int64 vectors, exact integer squared
-distances with cell-id tie-breaks, rounded-mean centroid updates — every
-step bit-reproducible, so even this three-stage iterative index is
-oracle-checkable (unrolled-CTE SQL, same pattern as kmeans_embeddings).
+Training and encoding run on the engine's deterministic k-means kernel
+(operators/clustering.py ``_codebook`` + ``_assign``), keyed by subspace:
+the m·k per-subspace centroids live on the driver, each Lloyd round is
+one ``mapInArrow`` pass of the subvectors past them (exact int64
+scores, cell-id tie-breaks) plus a rounded-mean update, and the final
+pass writes the codes. Every step is bit-reproducible, so even this
+three-stage iterative index is oracle-checkable (unrolled-CTE SQL, same
+pattern as kmeans_embeddings).
 
 Asymmetric distance (ADC): for query q and code vector c(v),
-``d2(q, v) ≈ Σ_j ||q_j − centroid_{j, c_j(v)}||²`` — computed relationally:
-the per-(query, subspace, centroid) distance table joins the exploded
-codes on (subspace, code) and a sum-aggregate folds the m terms. No UDF,
-no per-row loops; the distance table is |Q|·m·k rows, always broadcastable.
+``d2(q, v) ≈ Σ_j ||q_j − centroid_{j, c_j(v)}||²``. The per-(query,
+subspace, centroid) distance table is the query subvectors joined to
+the final codebook's rows (a driver-built local relation, no Lloyd
+lineage) and scored by the Arrow dot ``qdot_arrow`` — every pair is
+needed there. It is |Q|·m·k rows, broadcast into the join with the
+exploded codes on (subspace, code), and a sum-aggregate folds the m
+terms.
 """
 
 from __future__ import annotations
@@ -29,85 +35,28 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mapreducemovieanalysis_cloud_spark.functions.hashing import md5_bucket
-from mapreducemovieanalysis_cloud_spark.functions.ordkey import (
-    pack_score_cell,
-    unpack_cell,
-)
 from mapreducemovieanalysis_cloud_spark.functions.vector import (
     qdot_arrow,
     qnorm2,
     quantize,
+)
+from mapreducemovieanalysis_cloud_spark.operators.clustering import (
+    _assign,
+    _codebook,
 )
 
 
 def _subspace_points(
     emb: DataFrame, m: int, subdim: int, id_col: str, vec_col: str
 ) -> DataFrame:
-    """(vec_id, j, sv, sn2): quantized subvector per (vector, subspace)."""
+    """(vec_id, j, sv): quantized subvector per (vector, subspace)."""
     pts = emb.select(
         F.col(id_col).alias("vec_id"), quantize(vec_col).alias("qv")
     )
     slices = F.array(
         *[F.slice("qv", j * subdim + 1, subdim) for j in range(m)]
     )
-    return pts.select(
-        "vec_id", F.posexplode(slices).alias("j", "sv")
-    ).withColumn("sn2", qnorm2(F.col("sv")))
-
-
-def _assign_sub(
-    sub: DataFrame,
-    cents: DataFrame,
-    code_only: bool = False,
-    cell_bound: int | None = None,
-) -> DataFrame:
-    """Nearest centroid per (vector, subspace): every (subvector, centroid)
-    pair of the subspace scored through the broadcast centroids, then an
-    arg-min per (vector, subspace). (k-means assigns against a driver-held
-    codebook in one Arrow pass instead, ``clustering._assign``.)
-
-    Arg-min as a partial-aggregatable ``min_by`` over the exact-integer
-    ordering struct (d2, cell) — identical selection to the former
-    row_number window (int64 comparisons; lexicographic struct order ==
-    the window's two-key order), but the k-way score explosion collapses
-    map-side and no per-partition sort runs (round-13 optimization,
-    guide §2.3).
-
-    ``code_only=True`` (the corpus-linear ENCODE pass) additionally packs
-    the (d2, cell) ordering into one int64 (``cell_bound`` = the caller's
-    k) so the arg-min is a plain ``min(long)`` — codegen HashAggregate,
-    no per-partition Sort of the k-way exploded scores, where the struct
-    ordering planned as SortAggregate (round-14; see functions/ordkey.py
-    for the equivalence + in-plan guards)."""
-    scored = sub.join(F.broadcast(cents), "j").withColumn(
-        "d2",
-        F.col("sn2") - 2 * qdot_arrow(F.col("sv"), F.col("cv")) + F.col("cn2"),
-    )
-    if code_only:
-        if cell_bound is None:
-            raise ValueError("code_only assignment requires cell_bound")
-        packed = pack_score_cell(
-            F.col("d2"), F.col("cell"), cell_bound, "pq._assign_sub"
-        )
-        return (
-            scored.groupBy("vec_id", "j")
-            .agg(F.min(packed).alias("__p"))
-            .select(
-                "vec_id",
-                "j",
-                unpack_cell(F.col("__p"), cell_bound).alias("cell"),
-            )
-        )
-    return (
-        scored.groupBy("vec_id", "j")
-        .agg(
-            F.min_by(
-                F.struct("sv", "sn2", "cell"),
-                F.struct(F.col("d2").alias("_d2"), F.col("cell").alias("_c")),
-            ).alias("b")
-        )
-        .select("vec_id", "j", "b.sv", "b.sn2", "b.cell")
-    )
+    return pts.select("vec_id", F.posexplode(slices).alias("j", "sv"))
 
 
 def _update_sub(assigned: DataFrame, subdim: int) -> DataFrame:
@@ -159,8 +108,14 @@ def pq_codes(
     Returns ``(codes, centroids)``: codes = (vec_id, j, code) — m rows per
     vector; centroids = (j, cell, cv, cn2), the codebooks the codes refer
     to (the ones used by the FINAL assignment, mirroring
-    ``kmeans_assignments``' assign/update schedule). Seeds are the first-k
-    vectors' subvectors, like the k-means seeds.
+    ``kmeans_assignments``' assign/update schedule), as a local relation
+    built from the driver-held codebook. Seeds are the first-k vectors'
+    subvectors, like the k-means seeds.
+
+    The build runs Spark jobs: the seed codebook collect (one job) and,
+    per intermediate Lloyd round, the update's shuffle stage and collect
+    (two jobs) — 3 at ``iters=2``; each codebook is m·k rows, and
+    ``codes`` is the final assign pass.
 
     ``train_sample=S`` is the 100 TB training tier: the Lloyd
     assign/update iterations run over the deterministic md5 1/S sample of
@@ -187,30 +142,84 @@ def pq_codes(
         )
         if iters > 1 and train.isEmpty():
             # empty sample -> empty update -> empty codebooks -> the
-            # final assign joins nothing and the corpus silently encodes
-            # to zero rows; fail loudly instead
+            # final assign matches nothing and the corpus silently
+            # encodes to zero rows; fail loudly instead
             raise ValueError(
                 f"train_sample={train_sample} selected zero vectors; "
                 "decrease it (the md5 sample keeps ~1/S of the corpus)"
             )
     else:
         train = sub
-    cents = sub.where(F.col("vec_id") < k).select(
-        "j",
-        F.col("vec_id").alias("cell"),
-        F.col("sv").alias("cv"),
-        F.col("sn2").alias("cn2"),
-    )
-    assigned = None
-    for it in range(iters):
-        last = it == iters - 1
-        assigned = _assign_sub(
-            sub if last else train, cents, code_only=last, cell_bound=k
+    codebook = _codebook(
+        sub.where(F.col("vec_id") < k).select(
+            "j",
+            F.col("vec_id").alias("cell"),
+            F.col("sv").alias("cv"),
+            qnorm2(F.col("sv")).alias("cn2"),
         )
-        if not last:
-            cents = _update_sub(assigned, dim // m)
-    codes = assigned.select("vec_id", "j", F.col("cell").alias("code"))
-    return codes, cents
+    )
+    for _ in range(iters - 1):
+        codebook = _codebook(
+            _update_sub(_assign(train, codebook, "sv"), dim // m)
+        )
+    codes = _assign(sub, codebook, "sv", out=["vec_id", "j"])
+    cents = emb.sparkSession.createDataFrame(
+        [
+            (j, int(c), v.tolist(), int(n2))
+            for j, (cells, cv, cn2) in codebook.items()
+            for c, v, n2 in zip(cells, cv, cn2)
+        ],
+        "j int, cell bigint, cv array<bigint>, cn2 bigint",
+    )
+    return codes.withColumnRenamed("cell", "code"), cents
+
+
+def _adc_topk(
+    codes: DataFrame,
+    cents: DataFrame,
+    queries: DataFrame,
+    topk: int,
+    m: int,
+    dim: int,
+    query_id_col: str,
+    vec_col: str,
+    cand: DataFrame | None = None,
+) -> DataFrame:
+    """Top-k by asymmetric distance: the (query, subspace, code) distance
+    table — every query subvector against every centroid of its
+    subspace — joins the codes on (subspace, code) and a sum folds the m
+    terms per (query, vector). ``cand`` (query_id, vec_id) restricts the
+    scored vectors per query."""
+    qsub = _subspace_points(
+        queries, m, dim // m, query_id_col, vec_col
+    ).withColumnRenamed("vec_id", "query_id")
+    dtab = qsub.join(F.broadcast(cents), "j").select(
+        "query_id",
+        "j",
+        F.col("cell").alias("code"),
+        (
+            qnorm2(F.col("sv"))
+            - 2 * qdot_arrow(F.col("sv"), F.col("cv"))
+            + F.col("cn2")
+        ).alias("d2q"),
+    )
+    keys = ["j", "code"]
+    if cand is not None:
+        codes, keys = codes.join(cand, "vec_id"), ["query_id"] + keys
+    adc = (
+        codes.join(F.broadcast(dtab), keys)
+        .where(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
+        .agg(F.sum("d2q").alias("adc_d2"))
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("adc_d2").asc(), F.col("neighbor_id").asc()
+    )
+    return (
+        adc.withColumn("rank", F.row_number().over(w).cast("int"))
+        .where(F.col("rank") <= topk)
+        .select("query_id", "neighbor_id", "adc_d2", "rank")
+    )
 
 
 def ann_pq_topk(
@@ -233,32 +242,8 @@ def ann_pq_topk(
     codes, cents = pq_codes(
         corpus, m, k, iters, dim, id_col, vec_col, train_sample
     )
-    qsub = _subspace_points(
-        queries, m, dim // m, query_id_col, vec_col
-    ).withColumnRenamed("vec_id", "query_id")
-    dtab = qsub.join(F.broadcast(cents), "j").select(
-        "query_id",
-        "j",
-        F.col("cell").alias("code"),
-        (
-            F.col("sn2")
-            - 2 * qdot_arrow(F.col("sv"), F.col("cv"))
-            + F.col("cn2")
-        ).alias("d2q"),
-    )
-    adc = (
-        codes.join(F.broadcast(dtab), ["j", "code"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("d2q").alias("adc_d2"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_d2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= topk)
-        .select("query_id", "neighbor_id", "adc_d2", "rank")
+    return _adc_topk(
+        codes, cents, queries, topk, m, dim, query_id_col, vec_col
     )
 
 
@@ -282,68 +267,42 @@ def ann_ivf_pq_topk(
     bound WHAT each scoring costs (m table lookups, not a d-dim dot).
 
     Faiss's IVFPQ layout expressed relationally: coarse assignment is the
-    deterministic argmax-integer-dot kernel shared with ``ann_ivf_topk``;
-    candidates = (probed cell ⋈ cell-partitioned codes); ADC joins the
-    broadcast per-query distance table on (query, subspace, code) and
-    sum-folds the m terms. At 100 TB the codes table is stored partitioned
-    BY CELL (`ivf_write_index` pattern), so a probe reads nprobe partitions
-    of an m-bytes-per-vector table — both reductions compound. (No residual
+    k-means codebook pass over the zero-norm IVF codebook (argmax integer
+    dot, smaller centroid id on ties — ``ann_ivf_topk``'s cells), the
+    corpus keeping one cell and the queries ``nprobe``; candidates =
+    (probed cell ⋈ cell-assigned codes); ADC joins the broadcast
+    per-query distance table on (query, subspace, code) and sum-folds the
+    m terms. The build collects the IVF codebook (one Spark job) and the
+    PQ codebooks (``pq_codes``: 3 jobs at ``iters=2``). At 100 TB the
+    codes table is stored partitioned BY CELL (`ivf_write_index`
+    pattern), so a probe reads nprobe partitions of an m-bytes-per-vector
+    table — both reductions compound. (No residual
     encoding: codebooks are trained on raw subvectors, documented drift
     from Faiss which trains on cell residuals; exactness of the oracle
     comes first here, recall tuning is nprobe/k/m.)
     """
     from mapreducemovieanalysis_cloud_spark.operators.similarity import (
-        _ivf_cells,
-        _with_qv,
+        _ivf_codebook,
     )
 
-    cents = corpus.where(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("cent_id"), quantize(vec_col).alias("qv_cent")
-    )
-    cassign = _ivf_cells(
-        _with_qv(corpus, id_col, vec_col, "neighbor_id"), cents,
-        "neighbor_id", 1,
-    ).select("neighbor_id", "cell")
-    # Normalize the query id to the literal "query_id" once here (as the
-    # ann_pq_topk path does via withColumnRenamed): every downstream
-    # select/join (cand, dtab, adc) keys on "query_id", so a non-default
-    # query_id_col previously failed at analysis time.
-    qassign = _ivf_cells(
-        _with_qv(queries, query_id_col, vec_col, query_id_col), cents,
-        query_id_col, nprobe,
-    ).select(F.col(query_id_col).alias("query_id"), "cell")
-    cand = cassign.join(F.broadcast(qassign), "cell").select(
-        "query_id", F.col("neighbor_id").alias("vec_id")
+    codebook = _ivf_codebook(
+        corpus.where(F.col(id_col) < n_centroids), id_col, vec_col
     )
 
+    def qv(df: DataFrame, id_col: str, alias: str) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias(alias), quantize(vec_col).alias("qv")
+        )
+
+    cassign = _assign(qv(corpus, id_col, "vec_id"), codebook, out=["vec_id"])
+    qassign = _assign(
+        qv(queries, query_id_col, "query_id"), codebook, keep=nprobe,
+        out=["query_id"],
+    )
+    cand = cassign.join(F.broadcast(qassign), "cell").drop("cell")
     codes, pcents = pq_codes(
         corpus, m, k, iters, dim, id_col, vec_col, train_sample
     )
-    qsub = _subspace_points(
-        queries, m, dim // m, query_id_col, vec_col
-    ).withColumnRenamed("vec_id", "query_id")
-    dtab = qsub.join(F.broadcast(pcents), "j").select(
-        "query_id",
-        "j",
-        F.col("cell").alias("code"),
-        (
-            F.col("sn2")
-            - 2 * qdot_arrow(F.col("sv"), F.col("cv"))
-            + F.col("cn2")
-        ).alias("d2q"),
-    )
-    adc = (
-        codes.join(cand, "vec_id")
-        .join(F.broadcast(dtab), ["query_id", "j", "code"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("d2q").alias("adc_d2"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_d2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= topk)
-        .select("query_id", "neighbor_id", "adc_d2", "rank")
+    return _adc_topk(
+        codes, pcents, queries, topk, m, dim, query_id_col, vec_col, cand
     )

@@ -28,6 +28,10 @@ from mapreducemovieanalysis_cloud_spark.functions.vector import (
     srp_signature_arrow,
     srp_signatures_multi_arrow,
 )
+from mapreducemovieanalysis_cloud_spark.operators.clustering import (
+    _assign,
+    _codebook,
+)
 
 
 def _with_qv(df, id_col, vec_col, id_alias):
@@ -189,25 +193,29 @@ def ann_ivf_topk(
     tie-break. Queries probe their ``nprobe`` best cells and re-rank with
     exact cosine.
 
-    Scale shape: centroids are always tiny → broadcast; cell assignment is
-    map-side (no shuffle of the corpus); the probe join partitions by cell id,
-    so each query touches ~nprobe/n_centroids of the corpus instead of all of
-    it. At 100 TB the cell column becomes the partition key of the stored
-    index (write once, probe many).
+    Scale shape: the centroids are a zero-norm codebook collected to the
+    driver (n_centroids×d longs, one Spark job at build) and shipped in
+    the task closure; cell assignment is the k-means kernel's narrow
+    ``mapInArrow`` pass (no join, no shuffle of the corpus), the corpus
+    keeping its best cell and each query its ``nprobe`` best; the probe
+    join partitions by cell id, so each query touches ~nprobe/n_centroids
+    of the corpus instead of all of it. At 100 TB the cell column becomes
+    the partition key of the stored index (write once, probe many).
     """
-    cents = corpus.where(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("cent_id"), quantize(vec_col).alias("qv_cent")
+    codebook = _ivf_codebook(
+        corpus.where(F.col(id_col) < n_centroids), id_col, vec_col
     )
-
-    def best_cells(side: DataFrame, side_id: str, keep: int) -> DataFrame:
-        # the shared kernel: corpus side (keep=1) runs as a partial-agg
-        # min_by, query side (keep=nprobe) keeps the top-n window
-        return _ivf_cells(side, cents, side_id, keep)
-
-    c = best_cells(_with_qv(corpus, id_col, vec_col, "neighbor_id"),
-                   "neighbor_id", 1)
-    q = best_cells(_with_qv(queries, query_id_col, vec_col, query_id_col),
-                   query_id_col, nprobe)
+    c = _assign(
+        _with_qv(corpus, id_col, vec_col, "neighbor_id"),
+        codebook,
+        "qv_neighbor_id",
+    )
+    q = _assign(
+        _with_qv(queries, query_id_col, vec_col, query_id_col),
+        codebook,
+        f"qv_{query_id_col}",
+        nprobe,
+    )
     scored = c.join(F.broadcast(q), "cell").select(
         query_id_col,
         "neighbor_id",
@@ -297,65 +305,31 @@ def cosine_dup_pairs(
     )
 
 
-def _ivf_cells(
-    side: DataFrame,
-    cents: DataFrame,
-    side_id: str,
-    keep: int,
-) -> DataFrame:
-    """Best ``keep`` cells per vector: argmax integer dot against the
-    broadcast centroids, centroid id as the deterministic tie-break.
-
-    ``keep == 1`` — the CORPUS-side assignment, the rows-proportional
-    path — runs as a partial-aggregatable ``min_by`` over the ordering
-    struct (-cdot, cent_id) (identical selection to the former
-    row_number window: cdot desc == -cdot asc in exact int64, cent_id
-    asc tie-break), collapsing the n_centroids-way score explosion
-    map-side with no per-partition sort (round-13 optimization, guide
-    §2.3; see pq._assign_sub).  ``keep > 1`` is only ever the QUERY
-    side (nprobe cells per query — bounded rows) and keeps the window,
-    which a top-n-per-key genuinely needs."""
-    scored = side.join(F.broadcast(cents)).withColumn(
-        "cdot", qdot_arrow(F.col(f"qv_{side_id}"), F.col("qv_cent"))
-    )
-    if keep == 1:
-        passthrough = [
-            c for c in side.columns if c != side_id
-        ]
-        return (
-            scored.groupBy(side_id)
-            .agg(
-                F.min_by(
-                    F.struct(*passthrough, F.col("cent_id").alias("cell")),
-                    F.struct(
-                        (-F.col("cdot")).alias("_nd"),
-                        F.col("cent_id").alias("_c"),
-                    ),
-                ).alias("b")
-            )
-            .select(side_id, *[f"b.{c}" for c in passthrough], "b.cell")
+def _ivf_codebook(
+    cents: DataFrame, id_col: str = "cent_id", vec_col: str = "cent_vec"
+):
+    """IVF centroids as a k-means codebook with every norm 0: the
+    kernel's arg-min of ``−2·x·c`` is IVF's arg-max integer dot ``x·c``,
+    smaller centroid id on ties."""
+    return _codebook(
+        cents.select(
+            F.col(id_col).alias("cell"),
+            quantize(vec_col).alias("cv"),
+            F.lit(0).cast("long").alias("cn2"),
         )
-    w = Window.partitionBy(side_id).orderBy(
-        F.col("cdot").desc(), F.col("cent_id").asc()
-    )
-    return (
-        scored.withColumn("cell_rank", F.row_number().over(w))
-        .where(F.col("cell_rank") <= keep)
-        .drop("qv_cent", "cdot", "cell_rank")
-        .withColumnRenamed("cent_id", "cell")
     )
 
 
 def _ivf_assign(
-    vectors: DataFrame, qcents: DataFrame, id_col: str, vec_col: str
+    vectors: DataFrame, codebook, id_col: str, vec_col: str
 ) -> DataFrame:
-    """Cell-assign ``vectors`` against quantized centroids — the stored
+    """Cell-assign ``vectors`` against the IVF codebook — the stored
     row schema (id, qv, nrm, cell) shared by the base build and delta
     appends (assignment is per-vector, so a delta assigned under the
     same centroids is bit-identical to what a full rebuild would have
     placed in those cells)."""
-    return _ivf_cells(
-        _with_qv(vectors, id_col, vec_col, "nid"), qcents, "nid", 1
+    return _assign(
+        _with_qv(vectors, id_col, vec_col, "nid"), codebook, "qv_nid"
     ).select(
         F.col("nid").alias(id_col),
         F.col("qv_nid").alias("qv"),
@@ -396,11 +370,8 @@ def ivf_append_batch(
     base build."""
     import os
 
-    cents = spark.read.parquet(f"{path}/centroids")
-    qcents = cents.select(
-        "cent_id", quantize("cent_vec").alias("qv_cent")
-    )
-    assigned = _ivf_assign(new_vectors, qcents, id_col, vec_col)
+    codebook = _ivf_codebook(spark.read.parquet(f"{path}/centroids"))
+    assigned = _ivf_assign(new_vectors, codebook, id_col, vec_col)
     delta_dir = f"{path}/cells_delta/batch={batch_id}"
     assigned.write.mode("overwrite").partitionBy("cell").parquet(
         delta_dir
@@ -468,14 +439,12 @@ def ivf_write_index(
     cents = corpus.where(F.col(id_col) < n_centroids).select(
         F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_vec")
     )
-    qcents = cents.select(
-        "cent_id", quantize("cent_vec").alias("qv_cent")
-    )
     # cell cast to int BEFORE the write so the pinned DDL carries the
     # same dtype hive-partition inference always produced (a bigint
     # pin here widens the probe's cell comparisons and breaks subtree
     # dedup against the delta stores — measured as a doubled plan)
-    assigned = _ivf_assign(corpus, qcents, id_col, vec_col).withColumn(
+    codebook = _ivf_codebook(cents)
+    assigned = _ivf_assign(corpus, codebook, id_col, vec_col).withColumn(
         "cell", F.col("cell").cast("int")
     )
     # meta first (schema pin), cells next, centroids LAST: every probe
@@ -520,13 +489,10 @@ def ivf_probe_index(
     the scan, pinned by test) rather than depending on runtime DPP
     heuristics. Scoring re-ranks with the same exact quantized cosine as
     the inline operator."""
-    cents = spark.read.parquet(f"{path}/centroids").select(
-        "cent_id", quantize("cent_vec").alias("qv_cent")
-    )
-    q = _ivf_cells(
+    q = _assign(
         _with_qv(queries, query_id_col, vec_col, query_id_col),
-        cents,
-        query_id_col,
+        _ivf_codebook(spark.read.parquet(f"{path}/centroids")),
+        f"qv_{query_id_col}",
         nprobe,
     )
     probe_cells = sorted(

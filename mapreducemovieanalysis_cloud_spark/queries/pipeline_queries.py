@@ -383,7 +383,8 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed approximate top-10: 8 deterministic centroids (first 8
     vectors), exact-int dot-product cell assignment, nprobe=2, cosine
     re-rank. The scale path when SRP bucket skew is a concern: cell sizes
-    are bounded by the centroid spread, and the index partitions by cell."""
+    are bounded by the centroid spread, and the index partitions by cell.
+    The build runs one Spark job: the centroid codebook collect."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"

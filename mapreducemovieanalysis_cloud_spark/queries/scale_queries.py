@@ -264,7 +264,9 @@ def _pq_oracle(
 def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN: per-subspace codebooks (m=4, k=16, two
     Lloyd rounds), 4-byte codes, asymmetric-distance top-10 for 5 query
-    vectors — the compressed-index similarity tier."""
+    vectors — the compressed-index similarity tier. The build runs 3
+    Spark jobs: the seed codebook collect, then the Lloyd update's shuffle
+    stage and its codebook collect."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -608,7 +610,7 @@ def _ivf_pq_tail(
 ) -> str:
     """Cell-candidate CTEs over _pq_oracle's base/codes/qsub/dtab: coarse
     argmax-dot assignment (desc, centroid-id tie-break — mirrors
-    similarity._ivf_cells), query probes nprobe cells, ADC restricted to
+    the IVF codebook pass), query probes nprobe cells, ADC restricted to
     candidates."""
     return f"""
     ,ccents AS (SELECT vec_id AS cent_id, qv AS cv FROM base
@@ -647,7 +649,8 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ composed ANN (Faiss-IVFPQ shape, relational): coarse cells
     bound WHICH vectors each query scores (nprobe=2 of 8 cells), PQ codes
     bound WHAT each scoring costs (m=4 lookups vs a 64-dim dot) — the two
-    reductions compound into the production billion-vector read path."""
+    reductions compound into the production billion-vector read path.
+    The build runs 4 Spark jobs: the IVF codebook collect and ann_pq's 3."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"

@@ -2,9 +2,11 @@
 vector WIDER than the ``dim`` upper bound must fail loudly instead of being
 silently truncated (matching the engine's other fail-fast guards, e.g.
 pagerank_weighted's int64 guard); shorter vectors keep the documented
-null-sliced tolerance. ``clustering._assign``: NULL or ragged vectors and
-the int64 overflow bound raise named errors, ties go to the smaller cell,
-and an empty corpus assigns nothing."""
+null-sliced tolerance. ``clustering._assign``, the nearest-centroid
+kernel k-means, PQ and IVF share: NULL or ragged vectors and the int64
+overflow bound raise named errors in every caller, ties go to the smaller
+cell (also in the order of a multi-cell IVF probe), and an empty corpus
+assigns nothing."""
 
 from __future__ import annotations
 
@@ -109,6 +111,25 @@ def test_empty_corpus_gives_empty_result(spark, keep_vec):
         assert "cluster" in out.columns
 
 
+def _pq_codes(spark, rows):
+    from mapreducemovieanalysis_cloud_spark.operators.pq import pq_codes
+
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    return pq_codes(emb, m=2, k=2, iters=1, dim=2)[0]
+
+
+def _ivf_topk(spark, rows):
+    from mapreducemovieanalysis_cloud_spark.operators.similarity import (
+        ann_ivf_topk,
+    )
+
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    queries = emb.where("vec_id < 2").selectExpr(
+        "vec_id AS query_id", "embedding"
+    )
+    return ann_ivf_topk(emb, queries, k=2, n_centroids=2, nprobe=1)
+
+
 @pytest.mark.parametrize(
     "bad, match",
     [
@@ -120,12 +141,90 @@ def test_empty_corpus_gives_empty_result(spark, keep_vec):
             (9, [1.0, 2.0, 3.0]),
             "clustering._assign: (ragged vectors|vector width 3, expected 2)",
         ),
+        # narrower: pq_codes' last subvector of it comes out empty
+        (
+            (9, [1.0]),
+            "clustering._assign: (ragged vectors|vector width [01], "
+            "expected [12])",
+        ),
     ],
 )
 def test_null_or_ragged_vectors_raise(spark, bad, match):
+    """Every caller of the shared kernel — k-means, PQ encoding, IVF cell
+    assignment — raises its named error on a NULL or ragged embedding.
+    pq_codes slices each vector to ``dim`` before the kernel, so a wider
+    vector is only checked for the other two."""
     rows = [(i, [float(i), 1.0]) for i in range(8)] + [bad]
-    with pytest.raises(Exception, match=match):
-        _kmeans(spark, rows, k=2, iters=1, dim=2).collect()
+    runs = [
+        lambda: _kmeans(spark, rows, k=2, iters=1, dim=2),
+        lambda: _ivf_topk(spark, rows),
+    ]
+    if len(bad[1] or []) <= 2:
+        runs.append(lambda: _pq_codes(spark, rows))
+    for run in runs:
+        with pytest.raises(Exception, match=match):
+            run().collect()
+
+
+def _kernel_cells(spark, cents, points, keep):
+    """(id, [cells in kernel order]) of ``points`` against the IVF
+    codebook of ``cents`` (id -> vector) through the shared kernel."""
+    from mapreducemovieanalysis_cloud_spark.functions.vector import quantize
+    from mapreducemovieanalysis_cloud_spark.operators.clustering import (
+        _assign,
+    )
+    from mapreducemovieanalysis_cloud_spark.operators.similarity import (
+        _ivf_codebook,
+    )
+
+    ddl = "cent_id long, cent_vec array<double>"
+    cells = _ivf_codebook(spark.createDataFrame(list(cents.items()), ddl))
+    pts = spark.createDataFrame(
+        list(points.items()), "id long, v array<double>"
+    ).select("id", quantize("v").alias("qv"))
+    got = {}
+    for r in _assign(pts, cells, keep=keep, out=["id"]).collect():
+        got.setdefault(r.id, []).append(r.cell)
+    return got
+
+
+def test_equal_dots_go_to_the_smaller_centroid_id(spark):
+    # x·c5 == x·c3 == 2 and x·c8 == 1; the L2 distances order them
+    # differently (|x - c5|² = 2 < |x - c3|² = 5), so only the zero-norm
+    # arg-max-dot decision gives [3, 5, 8]. The codebook frame lists the
+    # larger id first: the order must come from the kernel.
+    cents = {5: [0.0, 1.0], 3: [2.0, 0.0], 8: [1.0, 0.0]}
+    x = {0: [1.0, 2.0]}
+    assert _kernel_cells(spark, cents, x, 1) == {0: [3]}
+    assert _kernel_cells(spark, cents, x, 2) == {0: [3, 5]}
+    # keep beyond the codebook size keeps every cell once
+    assert _kernel_cells(spark, cents, x, 9) == {0: [3, 5, 8]}
+
+
+def test_ivf_nprobe_cells_match_brute_force(spark, sf_dir):
+    """The query-side IVF cells (nprobe of them, best first) of every
+    sf0.001 embedding equal a pure-Python arg-max-dot reference with the
+    smaller centroid id first on ties."""
+    from mapreducemovieanalysis_cloud_spark.functions.vector import quantize
+    from mapreducemovieanalysis_cloud_spark.sources.readers import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    rows = emb.select("vec_id", "embedding").collect()
+    vecs = {r.vec_id: [float(x) for x in r.embedding] for r in rows}
+    qv = {
+        r.vec_id: r.qv
+        for r in emb.select("vec_id", quantize("embedding").alias("qv"))
+        .collect()
+    }
+    cents = {i: vecs[i] for i in range(8)}
+    want = {
+        i: sorted(
+            range(8), key=lambda c: (-sum(a * b for a, b in zip(v, qv[c])), c)
+        )[:3]
+        for i, v in qv.items()
+    }
+    assert len(want) == len(rows) > 8
+    assert _kernel_cells(spark, cents, vecs, 3) == want
 
 
 def test_codebook_width_mismatch_raises(spark):
@@ -138,7 +237,7 @@ def test_codebook_width_mismatch_raises(spark):
     pts = spark.createDataFrame(
         [(1, [1, 2, 3], 14)], "vec_id long, qv array<long>, pn2 long"
     )
-    codebook = (np.array([0]), np.array([[1, 1]]), np.array([2]))
+    codebook = {0: (np.array([0]), np.array([[1, 1]]), np.array([2]))}
     with pytest.raises(Exception, match="vector width 3, expected 2"):
         _assign(pts, codebook).collect()
 

@@ -444,3 +444,19 @@ def test_warm_semantic_dedup_build_runs_at_most_six_spark_jobs(spark, sf_dir):
     q = registry.queries()["semantic_dedup"]
     q(spark, sf_dir)  # warm
     assert _build_jobs(spark, lambda: q(spark, sf_dir)) <= 6
+
+
+@pytest.mark.parametrize(
+    "name, jobs", [("ann_ivf", 1), ("ann_pq", 3), ("ann_ivf_pq", 4)]
+)
+def test_ann_build_runs_its_codebook_jobs_only(spark, sf_dir, name, jobs):
+    """The IVF and PQ builds run only their codebook collects: ``ann_ivf``
+    the centroid codebook (1 job), ``ann_pq`` the seed codebook plus the
+    Lloyd update's shuffle stage and collect (3), ``ann_ivf_pq`` both
+    (4). Cell and code assignment are narrow maps in the returned frame's
+    action, not joins of their own."""
+    from tests.test_round4m import _build_jobs
+
+    q = registry.queries()[name]
+    q(spark, sf_dir)  # warm
+    assert _build_jobs(spark, lambda: q(spark, sf_dir)) <= jobs

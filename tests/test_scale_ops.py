@@ -246,6 +246,30 @@ def test_pq_codes_shape(spark):
         (j, c) for j in range(2) for c in range(4)
     }
     assert all(len(r.cv) == 4 for r in crows)  # subdim
+    # every code is the pure-Python per-subspace arg-min of the exact
+    # squared distance to the returned centroids, smaller cell on ties
+    from mapreducemovieanalysis_cloud_spark.functions.vector import quantize
+
+    qv = {
+        r.vec_id: r.qv
+        for r in emb.select("vec_id", quantize("embedding").alias("qv"))
+        .collect()
+    }
+    book = {}
+    for r in crows:
+        book.setdefault(r.j, []).append((r.cell, r.cv))
+    want = {
+        (v, j): min(
+            book[j],
+            key=lambda c: (
+                sum((a - b) ** 2 for a, b in zip(x[4 * j:4 * j + 4], c[1])),
+                c[0],
+            ),
+        )[0]
+        for v, x in qv.items()
+        for j in range(2)
+    }
+    assert {(r.vec_id, r.j): r.code for r in rows} == want
 
 
 def test_pq_ann_recovers_cluster_structure(spark):
@@ -766,35 +790,32 @@ def test_ivf_pq_recovers_cluster_structure(spark):
 def test_ivf_pq_scans_fewer_candidates_than_pq(spark, sf_dir):
     """The IVF stage must strictly shrink the ADC candidate set (that is
     its entire point): per query, candidates scored by IVF-PQ < corpus."""
-    from mapreducemovieanalysis_cloud_spark.operators import pq as pqm
+    from mapreducemovieanalysis_cloud_spark.operators.clustering import (
+        _assign,
+    )
     from mapreducemovieanalysis_cloud_spark.operators.similarity import (
-        _ivf_cells,
+        _ivf_codebook,
         _with_qv,
     )
-    from pyspark.sql import functions as FF
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where("vec_id < 5").selectExpr(
         "vec_id AS query_id", "embedding"
     )
     # candidate count per query = corpus rows in probed cells
-    from mapreducemovieanalysis_cloud_spark.functions.vector import quantize
-
-    cdf = emb.where("vec_id < 8").select(
-        FF.col("vec_id").alias("cent_id"), quantize("embedding").alias("qv_cent")
-    )
-    cassign = _ivf_cells(
-        _with_qv(emb, "vec_id", "embedding", "nid"), cdf, "nid", 1
+    cells = _ivf_codebook(emb.where("vec_id < 8"), "vec_id", "embedding")
+    cassign = _assign(
+        _with_qv(emb, "vec_id", "embedding", "nid"), cells, "qv_nid"
     ).select("nid", "cell")
-    qassign = _ivf_cells(
-        _with_qv(queries, "query_id", "embedding", "query_id"), cdf,
-        "query_id", 2,
+    qassign = _assign(
+        _with_qv(queries, "query_id", "embedding", "query_id"), cells,
+        "qv_query_id", 2,
     ).select("query_id", "cell")
     n_corpus = emb.count()
     per_q = (
         cassign.join(qassign, "cell")
         .groupBy("query_id")
-        .agg(FF.count(FF.lit(1)).alias("n_cand"))
+        .agg(F.count(F.lit(1)).alias("n_cand"))
         .collect()
     )
     assert len(per_q) == 5
