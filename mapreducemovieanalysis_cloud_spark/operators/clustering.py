@@ -157,12 +157,17 @@ def _assign(
     return pts.mapInArrow(assign, schema)
 
 
-def _update(assigned: DataFrame, dim: int) -> DataFrame:
-    """New centroid per cell: per-dimension rounded mean
-    ``CAST(round(s/n) AS bigint)`` (exact int64 sum, one IEEE division),
-    reassembled in dimension order. The ``dim`` indexed sums partial-
-    aggregate map-side to one row per cell, one exchange total; each sum
-    and the reassembly is one SQL expression string, one parse each.
+def _update(assigned: DataFrame, dim: int, vec: str = "qv") -> DataFrame:
+    """New centroid per cell from the ``vec`` column: per-dimension
+    rounded mean ``CAST(round(s/n) AS bigint)`` (exact int64 sum, one
+    IEEE division), reassembled in dimension order. The ``dim`` indexed
+    sums partial-aggregate map-side to one row per cell, one exchange
+    total; each sum and the reassembly is one SQL expression string, one
+    parse each. Rows are keyed by ``(j, cell)`` when ``assigned`` has a
+    ``j`` column, the rule ``_codebook`` and ``_assign`` follow: k-means
+    updates per cell, PQ (``pq.pq_codes``, ``vec="sv"``, ``dim`` the
+    subvector width) per (subspace, cell). PQ's subvectors are exactly
+    ``dim`` wide, so the width guard below never fires for them.
 
     Explicit sum/count rather than avg(): Spark's Average over LongType
     accumulates in DoubleType, which loses the exact-bigint-sum guarantee
@@ -180,11 +185,12 @@ def _update(assigned: DataFrame, dim: int) -> DataFrame:
     see pca_gram's hardcoded 64)."""
     # get() (not qv[i]): out-of-bounds must yield null under ANSI mode
     # for the shorter-than-dim tolerance above, not raise
-    per_cell = assigned.groupBy("cell").agg(
+    keys = ["j", "cell"] if "j" in assigned.columns else ["cell"]
+    per_cell = assigned.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("__n"),
-        F.min(F.size("qv")).alias("__len"),
-        F.max(F.size("qv")).alias("__maxlen"),
-        *[F.expr(f"sum(get(qv, {i})) AS __s{i}") for i in range(dim)],
+        F.min(F.size(vec)).alias("__len"),
+        F.max(F.size(vec)).alias("__maxlen"),
+        *[F.expr(f"sum(get({vec}, {i})) AS __s{i}") for i in range(dim)],
     )
     # assert_true returns null when the guard holds, so the when() wrapper
     # evaluates it per cell and passes __len through unchanged; a wider
@@ -206,7 +212,7 @@ def _update(assigned: DataFrame, dim: int) -> DataFrame:
         f"CAST(round(__s{i} / __n) AS bigint)" for i in range(dim)
     )
     return per_cell.select(
-        "cell",
+        *keys,
         F.slice(F.expr(f"array({means})"), F.lit(1), guarded_len).alias("cv"),
     ).withColumn("cn2", qnorm2(F.col("cv")))
 

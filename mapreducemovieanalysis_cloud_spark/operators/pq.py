@@ -14,10 +14,11 @@ Training and encoding run on the engine's deterministic k-means kernel
 (operators/clustering.py ``_codebook`` + ``_assign``), keyed by subspace:
 the m·k per-subspace centroids live on the driver, each Lloyd round is
 one ``mapInArrow`` pass of the subvectors past them (exact int64
-scores, cell-id tie-breaks) plus a rounded-mean update, and the final
-pass writes the codes. Every step is bit-reproducible, so even this
-three-stage iterative index is oracle-checkable (unrolled-CTE SQL, same
-pattern as kmeans_embeddings).
+scores, cell-id tie-breaks) plus ``clustering._update``'s rounded-mean
+update keyed by ``(j, cell)``, and the final pass writes the codes.
+Every step is bit-reproducible, so even this three-stage iterative index
+is oracle-checkable (unrolled-CTE SQL, same pattern as
+kmeans_embeddings).
 
 Asymmetric distance (ADC): for query q and code vector c(v),
 ``d2(q, v) ≈ Σ_j ||q_j − centroid_{j, c_j(v)}||²``. The per-(query,
@@ -31,7 +32,7 @@ terms.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mapreducemovieanalysis_cloud_spark.functions.hashing import md5_bucket
@@ -43,54 +44,42 @@ from mapreducemovieanalysis_cloud_spark.functions.vector import (
 from mapreducemovieanalysis_cloud_spark.operators.clustering import (
     _assign,
     _codebook,
+    _update,
+)
+from mapreducemovieanalysis_cloud_spark.operators.similarity import (
+    _ivf_codebook,
+    _topk,
 )
 
 
 def _subspace_points(
     emb: DataFrame, m: int, subdim: int, id_col: str, vec_col: str
 ) -> DataFrame:
-    """(vec_id, j, sv): quantized subvector per (vector, subspace)."""
+    """(vec_id, j, sv): quantized subvector per (vector, subspace). A
+    vector wider than ``m·subdim`` fails an in-plan guard instead of being
+    cut to its first ``m·subdim`` entries (as ``clustering._update`` does
+    for k-means); shorter and NULL ones reach the kernel's checks."""
     pts = emb.select(
         F.col(id_col).alias("vec_id"), quantize(vec_col).alias("qv")
     )
+    dim = m * subdim
     slices = F.array(
         *[F.slice("qv", j * subdim + 1, subdim) for j in range(m)]
     )
-    return pts.select("vec_id", F.posexplode(slices).alias("j", "sv"))
-
-
-def _update_sub(assigned: DataFrame, subdim: int) -> DataFrame:
-    """Rounded-mean centroid per (subspace, cell) — clustering._update with
-    the subspace key; exact int64 sums, one IEEE division per dim.
-
-    Dimension-indexed sums instead of posexplode + (j, cell, pos) rollup
-    + re-assembly: one exchange of k·m partial rows instead of two
-    exchanges of n·subdim exploded rows (round-13 optimization, guide
-    §2.3).  Value-identical: each dim's ``round(sum/count)`` is the same
-    expression over the same group; ``subdim`` is exact by construction
-    (dim // m from pq_codes).
-
-    ``sv[i]`` (GetArrayItem) rather than clustering._update's null-safe
-    ``F.get`` is DELIBERATE, not an oversight: every subvector here is
-    exactly ``subdim`` wide by construction (``F.slice(qv, j*subdim+1,
-    subdim)`` in pq_codes), so under ANSI mode an out-of-bounds read can
-    only mean corrupted input — failing loudly matches the engine's
-    runtime domain guards, while clustering._update's ``F.get`` exists
-    because its ``dim`` is an upper bound over caller-supplied widths."""
-    per_cell = assigned.groupBy("j", "cell").agg(
-        F.count(F.lit(1)).alias("__n"),
-        *[F.sum(F.col("sv")[i]).alias(f"__s{i}") for i in range(subdim)],
+    guarded = F.when(
+        F.assert_true(
+            F.coalesce(F.size("qv"), F.lit(0)) <= F.lit(dim),
+            F.concat(
+                F.lit(
+                    f"pq._subspace_points: vector wider than dim={dim} (got "
+                ),
+                F.size("qv").cast("string"),
+                F.lit("); pass a dim >= the corpus vector width"),
+            ),
+        ).isNull(),
+        slices,
     )
-    return per_cell.select(
-        "j",
-        "cell",
-        F.array(
-            *[
-                F.round(F.col(f"__s{i}") / F.col("__n")).cast("long")
-                for i in range(subdim)
-            ]
-        ).alias("cv"),
-    ).withColumn("cn2", qnorm2(F.col("cv")))
+    return pts.select("vec_id", F.posexplode(guarded).alias("j", "sv"))
 
 
 def pq_codes(
@@ -160,7 +149,7 @@ def pq_codes(
     )
     for _ in range(iters - 1):
         codebook = _codebook(
-            _update_sub(_assign(train, codebook, "sv"), dim // m)
+            _update(_assign(train, codebook, "sv"), dim // m, "sv")
         )
     codes = _assign(sub, codebook, "sv", out=["vec_id", "j"])
     cents = emb.sparkSession.createDataFrame(
@@ -208,17 +197,11 @@ def _adc_topk(
         codes, keys = codes.join(cand, "vec_id"), ["query_id"] + keys
     adc = (
         codes.join(F.broadcast(dtab), keys)
-        .where(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("d2q").alias("adc_d2"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_d2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= topk)
-        .select("query_id", "neighbor_id", "adc_d2", "rank")
+    return _topk(
+        adc, "query_id", "adc_d2", topk, desc=False, exclude_self=True
     )
 
 
@@ -281,10 +264,6 @@ def ann_ivf_pq_topk(
     from Faiss which trains on cell residuals; exactness of the oracle
     comes first here, recall tuning is nprobe/k/m.)
     """
-    from mapreducemovieanalysis_cloud_spark.operators.similarity import (
-        _ivf_codebook,
-    )
-
     codebook = _ivf_codebook(
         corpus.where(F.col(id_col) < n_centroids), id_col, vec_col
     )

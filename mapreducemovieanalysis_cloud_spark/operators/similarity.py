@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mapreducemovieanalysis_cloud_spark.functions.vector import (
-    qdot,
     qdot_arrow,
     qnorm2,
     quantize,
@@ -34,16 +33,18 @@ from mapreducemovieanalysis_cloud_spark.operators.clustering import (
 )
 
 
-def _with_qv(df, id_col, vec_col, id_alias):
-    """Quantized vector + its (once-computed) squared norm per row. Norms are
-    per-vector, not per-pair: precomputing them cuts the pair-scoring cost to
-    one dot product + one divide (3x fewer array folds)."""
+def _with_qv(df, id_col, vec_col, id_alias, *extra):
+    """Quantized vector + its (once-computed) norm per row, plus the
+    ``extra`` columns of the same row. Norms are per-vector, not per-pair:
+    precomputing them cuts the pair-scoring cost to one dot product + one
+    divide. The vector is quantized once and the norm reads that column
+    (CollapseProject keeps the two projects apart because the quantizing
+    ``transform`` is referenced more than once)."""
+    qv = f"qv_{id_alias}"
     return df.select(
-        F.col(id_col).alias(id_alias),
-        quantize(vec_col).alias(f"qv_{id_alias}"),
-        F.sqrt(qnorm2(quantize(vec_col)).cast("double")).alias(
-            f"nrm_{id_alias}"
-        ),
+        F.col(id_col).alias(id_alias), *extra, quantize(vec_col).alias(qv)
+    ).withColumn(
+        f"nrm_{id_alias}", F.sqrt(qnorm2(F.col(qv)).cast("double"))
     )
 
 
@@ -54,6 +55,28 @@ def _pair_cosine(a_alias, b_alias):
         qdot_arrow(F.col(f"qv_{a_alias}"), F.col(f"qv_{b_alias}"))
         / (F.col(f"nrm_{a_alias}") * F.col(f"nrm_{b_alias}"))
     ).alias("cosine")
+
+
+def _topk(
+    scored: DataFrame,
+    qcol: str,
+    score: str,
+    k: int,
+    desc: bool = True,
+    exclude_self: bool = False,
+) -> DataFrame:
+    """The per-query top-k every similarity tier ends in: ``scored``'s
+    columns plus an int ``rank`` 1..k per ``qcol``, ordered by ``score``
+    (descending for similarities, ascending for distances) with the
+    smaller ``neighbor_id`` first on ties, so the kept set is
+    deterministic. ``exclude_self`` drops the query's own id first."""
+    if exclude_self:
+        scored = scored.where(F.col("neighbor_id") != F.col(qcol))
+    order = F.col(score).desc() if desc else F.col(score).asc()
+    w = Window.partitionBy(qcol).orderBy(order, F.col("neighbor_id").asc())
+    return scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k
+    )
 
 
 def brute_force_topk(
@@ -78,16 +101,7 @@ def brute_force_topk(
         "neighbor_id",
         _pair_cosine(query_id_col, "neighbor_id"),
     )
-    if exclude_self:
-        scored = scored.where(F.col("neighbor_id") != F.col(query_id_col))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine", "rank")
-    )
+    return _topk(scored, query_id_col, "cosine", k, exclude_self=exclude_self)
 
 
 def srp_signature(
@@ -162,16 +176,7 @@ def ann_lsh_topk(
         "neighbor_id",
         _pair_cosine(query_id_col, "neighbor_id"),
     )
-    if exclude_self:
-        scored = scored.where(F.col("neighbor_id") != F.col(query_id_col))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine", "rank")
-    )
+    return _topk(scored, query_id_col, "cosine", k, exclude_self=exclude_self)
 
 
 def ann_ivf_topk(
@@ -221,16 +226,7 @@ def ann_ivf_topk(
         "neighbor_id",
         _pair_cosine(query_id_col, "neighbor_id"),
     )
-    if exclude_self:
-        scored = scored.where(F.col("neighbor_id") != F.col(query_id_col))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine", "rank")
-    )
+    return _topk(scored, query_id_col, "cosine", k, exclude_self=exclude_self)
 
 
 def cosine_dup_pairs(
@@ -514,16 +510,7 @@ def ivf_probe_index(
         "neighbor_id",
         _pair_cosine(query_id_col, "neighbor_id"),
     )
-    if exclude_self:
-        scored = scored.where(F.col("neighbor_id") != F.col(query_id_col))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine", "rank")
-    )
+    return _topk(scored, query_id_col, "cosine", k, exclude_self=exclude_self)
 
 
 def ann_lsh_multiband_topk(
@@ -585,16 +572,7 @@ def ann_lsh_multiband_topk(
             _pair_cosine(query_id_col, "neighbor_id"),
         )
     )
-    if exclude_self:
-        scored = scored.where(F.col("neighbor_id") != F.col(query_id_col))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine", "rank")
-    )
+    return _topk(scored, query_id_col, "cosine", k, exclude_self=exclude_self)
 
 
 def hard_negatives(
@@ -619,20 +597,14 @@ def hard_negatives(
     (pq.ann_ivf_pq_topk / the stored cell-partitioned index) and
     post-filter on label — same output contract, sublinear probe.
     """
-    c = _with_qv(corpus, id_col, vec_col, "neighbor_id").join(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(label_col).alias("neighbor_label"),
-        ),
-        "neighbor_id",
+    c = _with_qv(
+        corpus, id_col, vec_col, "neighbor_id",
+        F.col(label_col).alias("neighbor_label"),
     )
-    q = _with_qv(anchors, query_id_col, vec_col, query_id_col).join(
-        anchors.select(
-            F.col(query_id_col).alias(query_id_col + "_lbl_key"),
-            F.col(label_col).alias("anchor_label"),
-        ),
-        F.col(query_id_col) == F.col(query_id_col + "_lbl_key"),
-    ).drop(query_id_col + "_lbl_key")
+    q = _with_qv(
+        anchors, query_id_col, vec_col, query_id_col,
+        F.col(label_col).alias("anchor_label"),
+    )
     scored = (
         c.join(F.broadcast(q))
         .where(F.col("neighbor_label") != F.col("anchor_label"))
@@ -644,21 +616,7 @@ def hard_negatives(
             _pair_cosine(query_id_col, "neighbor_id"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            "anchor_label",
-            "neighbor_id",
-            "neighbor_label",
-            "cosine",
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _topk(scored, query_id_col, "cosine", k)
 
 
 # ---- scalar 8-bit quantization (SQ8) tier -----------------------------------
@@ -733,28 +691,14 @@ def sq8_topk(
     q = queries.select(
         F.col(query_id_col), quantize(vec_col).alias("__qq")
     )
-    scored = (
-        rec.join(F.broadcast(q))
-        .where(F.col(id_col) != F.col(query_id_col))
-        .select(
-            F.col(query_id_col),
-            F.col(id_col).alias("neighbor_id"),
-            F.expr(
-                "aggregate(zip_with(__qq, recon, (a, b) -> (a - b) * (a - b)),"
-                " 0L, (acc, x) -> acc + x)"
-            ).alias("dist_sq"),
-        )
+    scored = rec.join(F.broadcast(q)).select(
+        F.col(query_id_col),
+        F.col(id_col).alias("neighbor_id"),
+        F.expr(
+            "aggregate(zip_with(__qq, recon, (a, b) -> (a - b) * (a - b)),"
+            " 0L, (acc, x) -> acc + x)"
+        ).alias("dist_sq"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("dist_sq").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            "neighbor_id",
-            "dist_sq",
-            F.col("rank").cast("int").alias("rank"),
-        )
+    return _topk(
+        scored, query_id_col, "dist_sq", k, desc=False, exclude_self=True
     )

@@ -400,8 +400,10 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducemovieanalysis_cloud_spark.operators.clustering import (
         kmeans_assignments,
     )
+    from mapreducemovieanalysis_cloud_spark.operators.similarity import (
+        _pair_cosine,
+    )
     from mapreducemovieanalysis_cloud_spark.operators.skew import salted_join
-    from mapreducemovieanalysis_cloud_spark.functions.vector import qdot_arrow
 
     # localCheckpoint materializes the final assignment before the
     # self-join reads it twice (the PageRank/triangle pattern): without it
@@ -429,13 +431,10 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("qv").alias("qv_b"),
         F.col("nrm").alias("nrm_b"),
     )
-    cosine = qdot_arrow(F.col("qv_a"), F.col("qv_b")) / (
-        F.col("nrm_a") * F.col("nrm_b")
-    )
     return (
         salted_join(x, y, "cluster", "cluster_b", salt_buckets=8)
         .where(F.col("id_a") < F.col("id_b"))
-        .where(cosine >= 0.4)
+        .where(_pair_cosine("a", "b") >= 0.4)
         .groupBy(F.col("id_b").alias("vec_id"))
         .agg(
             F.min("id_a").alias("keeper"),

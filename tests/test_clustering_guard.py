@@ -152,17 +152,20 @@ def _ivf_topk(spark, rows):
 def test_null_or_ragged_vectors_raise(spark, bad, match):
     """Every caller of the shared kernel — k-means, PQ encoding, IVF cell
     assignment — raises its named error on a NULL or ragged embedding.
-    pq_codes slices each vector to ``dim`` before the kernel, so a wider
-    vector is only checked for the other two."""
+    pq_codes slices each vector into ``m`` subvectors, so a vector wider
+    than ``dim`` fails pq's own in-plan guard before the kernel sees it."""
     rows = [(i, [float(i), 1.0]) for i in range(8)] + [bad]
-    runs = [
-        lambda: _kmeans(spark, rows, k=2, iters=1, dim=2),
-        lambda: _ivf_topk(spark, rows),
-    ]
-    if len(bad[1] or []) <= 2:
-        runs.append(lambda: _pq_codes(spark, rows))
-    for run in runs:
-        with pytest.raises(Exception, match=match):
+    pq_match = (
+        "pq._subspace_points: vector wider than dim=2 \\(got 3\\)"
+        if len(bad[1] or []) > 2
+        else match
+    )
+    for run, want in [
+        (lambda: _kmeans(spark, rows, k=2, iters=1, dim=2), match),
+        (lambda: _ivf_topk(spark, rows), match),
+        (lambda: _pq_codes(spark, rows), pq_match),
+    ]:
+        with pytest.raises(Exception, match=want):
             run().collect()
 
 
